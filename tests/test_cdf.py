@@ -182,12 +182,13 @@ def test_rollback_feed_folds_to_restored_state(spark, tmp_path):
 
 
 def test_changes_stream_tails_the_feed(spark, tmp_path):
-    """Streaming CDF source: a file stream over the per-commit change
-    logs delivers exactly the rows the batch feed reports, with
-    _commit_version recovered from the path — and a second availableNow
-    run against the same checkpoint picks up ONLY commits made since."""
-    from tlcn_oer_lakehouse_spark.streaming.ingest import changes_stream
+    """Streaming CDF source: ``oer_mergetable_changes`` delivers exactly
+    the rows the batch feed reports, _commit_version included — and a
+    second availableNow run against the same checkpoint picks up ONLY
+    commits made since."""
+    from tlcn_oer_lakehouse_spark.sources import pyds
 
+    pyds.register(spark)
     t = _table(spark, tmp_path)
     t.create(_fp(spark.createDataFrame([(1, "a"), (2, "b")], ["id", "val"])))
     t.merge_upsert(_fp(spark.createDataFrame([(2, "B"), (3, "c")], ["id", "val"])))
@@ -201,14 +202,20 @@ def test_changes_stream_tails_the_feed(spark, tmp_path):
         )
 
     ckpt = str(tmp_path / "ckpt")
-    q = (
-        changes_stream(t)
-        .writeStream.foreachBatch(_collect)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+
+    def _drain():
+        q = (
+            spark.readStream.format("oer_mergetable_changes")
+            .option("path", t.path)
+            .load()
+            .writeStream.foreachBatch(_collect)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+
+    _drain()
     head = t._head_version()
     batch_feed = sorted(
         (r._commit_version, r._change_type, r.id, r.val)
@@ -219,14 +226,7 @@ def test_changes_stream_tails_the_feed(spark, tmp_path):
     # new commit -> restarted stream delivers only the delta
     t.merge_delete(spark.createDataFrame([(1,), (2,)], ["id"]))
     seen.clear()
-    q = (
-        changes_stream(t)
-        .writeStream.foreachBatch(_collect)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    _drain()
     v_del = t._head_version()
     assert sorted(seen) == [(v_del, "delete", 3, "c")]
 

@@ -58,6 +58,24 @@ def test_merge_ingest_two_batches(spark, tmp_path):
     ]
 
 
+def test_merge_ingest_skips_empty_landing_file(spark, tmp_path):
+    """A 0-row landing file next to a 2-row one: the empty micro-batch is
+    skipped, so the table ends with exactly one commit holding 2 rows."""
+    landing = str(tmp_path / "landing")
+    table = ParquetMergeTable(spark, str(tmp_path / "t"), key="id")
+    _write_batch(spark, landing, [], "b0")
+    _write_batch(spark, landing, [(1, "a", "f1"), (2, "b", "f2")], "b1")
+    q = merge_ingest(
+        landing_stream(spark, f"{landing}/*", SCHEMA, max_files_per_trigger=1),
+        table,
+        str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert table._all_version_nums() == [0]
+    assert sorted((r.id, r.val) for r in table.read().collect()) == [(1, "a"), (2, "b")]
+
+
 def test_windowed_stream_matches_batch(spark, tmp_path):
     """The watermarked streaming aggregation over a finite file stream
     produces exactly the batch tumbling-window result."""

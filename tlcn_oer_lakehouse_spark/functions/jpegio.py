@@ -525,7 +525,7 @@ def read_jpeg(payload: bytes) -> np.ndarray:
     # former per-block 8x8 numpy calls dominated large rasters).  The
     # batched matmul issues the same (T.T @ deq) @ T float64 products,
     # pinned bit-identical to the per-block form by the codec tests and
-    # the old-vs-new equality harness in tests/test_operators_r12.py.
+    # the old-vs-new equality harness in tests/test_optimization_r12.py.
     zz_all = np.zeros((nby * nbx * ncomp, 64), dtype=np.int64)
     luts = [
         (htabs[(0, scan[ci][1])], htabs[(1, scan[ci][2])])

@@ -24,7 +24,14 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _default_driver_memory() -> str:
+    """Half of physical RAM, at most 24 GB: local mode runs every executor
+    inside the driver JVM, and the other half stays free for the Python
+    UDF workers and the OS — a heap sized past physical RAM gets the JVM
+    OOM-killed by the kernel mid-run instead of spilling."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(24 * 1024, ram_mb // 2)}m"
 
 
 def get_spark(
@@ -38,8 +45,10 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` when unset so tests,
     bench and the driver's verify all share one profile; on a real cluster
     pass ``master=None`` with ``spark.master`` provided by spark-submit.
+    ``$SPARK_GRAFT_CPUS`` defaults to this host's CPU count and also sets
+    the default shuffle partitioning.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     builder = SparkSession.builder.appName(app_name)
     if master is not None:
         builder = builder.master(master)
@@ -47,9 +56,7 @@ def get_spark(
         builder = builder.master(f"local[{cpus}]")
 
     conf = {
-        "spark.sql.shuffle.partitions": str(
-            shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
-        ),
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or cpus),
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -68,7 +75,8 @@ def get_spark(
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # local mode: keep the UI off and the JVM quiet
         "spark.ui.enabled": "false",
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+        or _default_driver_memory(),
         # parquet scan sizing for the local profile; a cluster deployment
         # overrides via spark-defaults
         "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),

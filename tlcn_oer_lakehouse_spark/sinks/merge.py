@@ -71,6 +71,18 @@ def all_version_nums(path: str) -> list[int]:
     return sorted(out)
 
 
+def head_version(path: str) -> int | None:
+    """Version number the head symlink at ``path`` points at (None for a
+    missing or legacy plain-dir head)."""
+    if not os.path.islink(path):
+        return None
+    target = os.path.basename(os.readlink(path))
+    base = os.path.basename(path) + "__v"
+    if target.startswith(base) and target[len(base):].isdigit():
+        return int(target[len(base):])
+    return None
+
+
 def publish_snapshot(path: str, staging: str) -> str:
     """Rename ``staging`` to ``path``'s next immutable version dir and
     swap the head symlink to it (one atomic ``os.replace``).  Module-level
@@ -216,13 +228,7 @@ class ParquetMergeTable:
 
     def _head_version(self) -> int | None:
         """Version number the head symlink currently points at."""
-        if not os.path.islink(self.path):
-            return None
-        target = os.path.basename(os.readlink(self.path))
-        base = os.path.basename(self.path) + "__v"
-        if target.startswith(base) and target[len(base):].isdigit():
-            return int(target[len(base):])
-        return None
+        return head_version(self.path)
 
     def versions(self) -> list[int]:
         """Retained (non-head) snapshot version numbers, oldest first."""

@@ -68,6 +68,12 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import LongType, StructField, StructType
 
+from tlcn_oer_lakehouse_spark.sinks.merge import (
+    all_version_nums,
+    head_version,
+    version_dir,
+)
+
 _HIDDEN_PREFIXES = ("_", ".")
 
 
@@ -102,7 +108,7 @@ def _hive_values(snapshot: str, file_path: str) -> dict[str, str]:
 
 def _resolve_snapshot(path: str, version: str | None) -> str:
     if version is not None:
-        snap = f"{path}__v{int(version):06d}"
+        snap = version_dir(path, int(version))
         if not os.path.isdir(snap):
             raise ValueError(f"version {version} not retained for {path}")
         return snap
@@ -110,17 +116,6 @@ def _resolve_snapshot(path: str, version: str | None) -> str:
     if not os.path.isdir(snap):
         raise ValueError(f"no merge table at {path}")
     return snap
-
-
-def _head_version(path: str) -> int:
-    """Version number the head symlink points at (0 for legacy dirs)."""
-    if not os.path.islink(path):
-        return 0
-    target = os.path.basename(os.readlink(path))
-    base = os.path.basename(path) + "__v"
-    if target.startswith(base) and target[len(base):].isdigit():
-        return int(target[len(base):])
-    return 0
 
 
 @dataclass
@@ -256,7 +251,7 @@ class _MergeTableWriter(DataSourceArrowWriter):
     ``_changes/`` log tagged ``_change_type='insert'``, so CDF consumers
     (``read_changes``, the streaming source above) see appended rows with
     no driver-side data movement.  Overwrite commits log no changes, the
-    same physical-only semantics as ``ParquetMergeTable.create``.
+    same physical-only semantics as ``ParquetMergeTable.compact``.
 
     commit() is driver-side METADATA work only: hardlink the previous
     snapshot's data files into staging (append), verify schema agreement
@@ -377,7 +372,7 @@ class _MergeTableWriter(DataSourceArrowWriter):
                 if marker.startswith("_epoch_"):
                     open(os.path.join(self._staging, marker), "w").close()
         if self._overwrite:
-            # physical-only commit — same CDF semantics as create()
+            # physical-only commit — same CDF semantics as compact()
             ch = os.path.join(self._staging, "_changes")
             if os.path.isdir(ch):
                 shutil.rmtree(ch)
@@ -466,14 +461,11 @@ class _MergeTableStreamWriter(DataSourceStreamArrowWriter):
         return _FileCommit(filename=name, columns=columns)
 
     def _epoch_already_committed(self, batch_id: int) -> bool:
-        parent = os.path.dirname(self._path) or "."
-        base = os.path.basename(self._path) + "__v"
-        for name in os.listdir(parent):
-            if name.startswith(base) and os.path.isfile(
-                os.path.join(parent, name, f"_epoch_{batch_id}")
-            ):
-                return True
-        return False
+        marker = f"_epoch_{batch_id}"
+        return any(
+            os.path.isfile(os.path.join(version_dir(self._path, v), marker))
+            for v in all_version_nums(self._path)
+        )
 
     def _drop_pending(self, messages) -> None:
         for m in messages:
@@ -574,29 +566,20 @@ class _ChangesStreamReader(DataSourceStreamReader):
             raise ValueError("oer_mergetable_changes requires .option('path', ...)")
         self._path = options["path"]
         # since_version is an EXCLUSIVE start; the default -1 therefore
-        # includes commit version 0.  Tables created by the python
-        # batch/stream writers log CDF inserts at v0 (unlike
-        # ParquetMergeTable.create, which is physical-only), so a 0
-        # default would silently skip a py-written table's first commit.
+        # includes commit version 0.  Every writer — ParquetMergeTable.create
+        # and the python batch/stream writers alike — logs its first
+        # commit's rows as CDF inserts at v0, so a 0 default would
+        # silently skip a table's first commit.
         self._since = int(options.get("since_version", -1))
         self._arrow_schema = self._infer_changes_schema()
 
-    def _all_versions(self) -> list[int]:
-        parent = os.path.dirname(self._path) or "."
-        base = os.path.basename(self._path) + "__v"
-        out = []
-        for name in os.listdir(parent):
-            if name.startswith(base) and name[len(base):].isdigit():
-                out.append(int(name[len(base):]))
-        return sorted(out)
-
     def _changes_dir(self, v: int) -> str:
-        return os.path.join(f"{self._path}__v{v:06d}", "_changes")
+        return os.path.join(version_dir(self._path, v), "_changes")
 
     def _infer_changes_schema(self):
         import pyarrow.parquet as pq
 
-        for v in self._all_versions():
+        for v in all_version_nums(self._path):
             d = self._changes_dir(v)
             if os.path.isdir(d):
                 for f in sorted(os.listdir(d)):
@@ -619,7 +602,9 @@ class _ChangesStreamReader(DataSourceStreamReader):
         return {"version": self._since}
 
     def latestOffset(self) -> dict:
-        return {"version": max(_head_version(self._path), self._since)}
+        head = head_version(self._path)
+        # a legacy plain-dir head (not a symlink) counts as version 0
+        return {"version": max(0 if head is None else head, self._since)}
 
     def partitions(self, start: dict, end: dict) -> Sequence[_CommitPartition]:
         return [

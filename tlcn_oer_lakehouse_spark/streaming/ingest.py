@@ -1,4 +1,4 @@
-"""Streaming ingest: landing-directory file stream → foreachBatch MERGE.
+"""Streaming ingest: landing-directory file stream → per-micro-batch MERGE.
 
 This is the Auto-Loader-style pattern SURVEY §7.6 calls for: new files
 appearing under a landing prefix are discovered incrementally (file-source
@@ -8,15 +8,26 @@ and streaming share one sink, one change-detection predicate, and one
 idempotence guarantee.  Late data is bounded with an event-time watermark
 before any stateful aggregation.
 
+Every ``*_ingest`` function below is one per-batch body handed to
+:func:`_start`, the single query runner.  Its contract holds for all of
+them: empty micro-batches are skipped before the body runs, the query
+drains what has landed under Spark's available-now trigger and stops,
+and the caller owns ``checkpoint_dir`` — reusing it on a restart
+resumes from the last committed batch, so only newly landed files are
+processed.  Delivery is at-least-once: a batch interrupted by a crash is
+replayed on restart, so every body is written to make a replay harmless.
+
 Scale notes: file discovery is O(new files) per trigger
-(``maxFilesPerTrigger`` bounds batch size); foreachBatch MERGE keeps
+(``maxFilesPerTrigger`` bounds batch size); per-batch MERGE keeps
 write amplification proportional to changed rows; watermark state is
 per-key bounded and spills via RocksDB state store on a real cluster.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
@@ -28,48 +39,56 @@ def landing_stream(
     spark: SparkSession,
     landing_dir: str,
     schema: StructType,
-    fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """File-source stream over a landing directory (S1's streaming twin)."""
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.format(fmt).load(landing_dir)
+    return reader.parquet(landing_dir)
+
+
+def _start(
+    stream_df: DataFrame,
+    checkpoint_dir: str,
+    process: Callable[[DataFrame, int], None],
+) -> StreamingQuery:
+    """Run ``process(batch_df, batch_id)`` on every non-empty micro-batch
+    of ``stream_df`` until the landed input is drained."""
+
+    def _nonempty(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            process(batch_df, batch_id)
+
+    return (
+        stream_df.writeStream.foreachBatch(_nonempty)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def merge_ingest(
     stream_df: DataFrame,
     table: ParquetMergeTable,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Upsert every micro-batch into ``table`` (K1 as a streaming sink).
 
-    foreachBatch gives exactly-once-per-batch semantics together with the
-    sink's change detection: a replayed batch after a crash re-merges and
+    With the sink's change detection a replayed batch re-merges and
     detects zero changes — idempotent end-to-end."""
 
-    def _upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _upsert(batch_df: DataFrame, _batch_id: int) -> None:
         table.merge_upsert(batch_df)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, checkpoint_dir, _upsert)
 
 
 def silver_ingest(
     stream_df: DataFrame,
     warehouse_root: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """The medallion SILVER lifecycle as a streaming ingest: every
     micro-batch of bronze scrape records runs the full batch silver pass
@@ -91,19 +110,10 @@ def silver_ingest(
     byte-identical tables (``test_silver_ingest_replay_is_idempotent``)."""
     from tlcn_oer_lakehouse_spark.pipelines.medallion import run_silver
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _silver(batch_df: DataFrame, _batch_id: int) -> None:
         run_silver(batch_df.sparkSession, batch_df, warehouse_root)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, checkpoint_dir, _silver)
 
 
 def scd2_ingest(
@@ -113,20 +123,17 @@ def scd2_ingest(
     tracked_cols: list[str],
     ts_col: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming type-2 dimension maintenance: each micro-batch is
     latest-wins-deduped, then SCD2-merged into ``table`` (history rows
     close out, new versions open at the batch's max event time).  The
     same :mod:`~tlcn_oer_lakehouse_spark.operators.scd2` algebra runs in
-    batch and streaming — foreachBatch replay after a crash re-detects
-    zero changes, so the version chain never double-opens."""
+    batch and streaming — a replayed batch re-detects zero changes, so
+    the version chain never double-opens."""
     from tlcn_oer_lakehouse_spark.operators.incremental import latest_wins
     from tlcn_oer_lakehouse_spark.operators.scd2 import scd2_init, scd2_merge
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch = latest_wins(batch_df, key, [ts_col])
         ts = batch.agg(F.max(ts_col)).first()[0]
         rows = batch.drop(ts_col)
@@ -140,14 +147,7 @@ def scd2_ingest(
         # SCD2 rewrites are row-level state transitions, not appends
         table._write_snapshot(merged.localCheckpoint())
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, checkpoint_dir, _merge)
 
 
 def enrich_stream(
@@ -217,45 +217,31 @@ def windowed_counts_stream(
     )
 
 
-def near_dup_ingest(
+def _dedup_ingest(
     stream_df: DataFrame,
     corpus_table: ParquetMergeTable,
     pairs_dir: str,
     checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    available_now: bool = True,
+    id_col: str,
+    text_col: str,
+    threshold: float,
+    pair_op: Callable[..., DataFrame],
 ) -> StreamingQuery:
-    """Streaming near-duplicate detection at ingest: each micro-batch is
-    (1) checked against the already-ingested corpus AND itself with the
-    batch-scaled incremental MinHash operator, (2) appended to the
-    corpus table via MERGE, and (3) its near-dup pairs appended to
-    ``pairs_dir`` — so the pair log and the corpus stay causally
-    consistent (a doc's pairs are recorded in the same micro-batch that
-    admits it).
-
-    Composition of tested pieces: landing stream → foreachBatch →
-    operators/dedup.py:minhash_incremental_pairs →
-    ParquetMergeTable.merge_upsert.  Pairs are written BEFORE corpus
-    admission, so a crash between the two replays into duplicate pair
-    rows (bit-identical, batch_id-tagged) rather than lost ones;
-    :func:`read_pairs` collapses them.  Per-trigger work scales with the
-    batch and its collision set, not the corpus (the band probe is an
-    equi-join against the existing band table; on a deployment that
-    table is a persisted, bucketed output of previous batches)."""
-    from tlcn_oer_lakehouse_spark.operators.dedup import minhash_incremental_pairs
+    """Shared body of the two dedup ingests: ``pair_op(existing, batch,
+    ...)`` finds the pairs touching the batch, which are appended under
+    ``pairs_dir`` BEFORE the batch is admitted to ``corpus_table`` — a
+    crash between the two replays into duplicate bit-identical
+    (batch_id-tagged) pair rows rather than lost ones, and
+    :func:`read_pairs` collapses them."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch = batch_df.select(id_col, text_col).persist()
         spark = batch.sparkSession
         if corpus_table.exists():
             existing = corpus_table.read().select(id_col, text_col)
         else:
             existing = spark.createDataFrame([], batch.schema)
-        # Per-trigger cache hygiene (ADVICE r10): the operator's internal
+        # Per-trigger cache hygiene: the operator's internal
         # persists include frames derived from the GROWING corpus; a
         # long-running stream that lets them default-persist accumulates
         # one corpus copy per trigger.  Track and drop them per batch.
@@ -265,7 +251,7 @@ def near_dup_ingest(
             held.append(frame.persist())
             return frame
 
-        pairs = minhash_incremental_pairs(
+        pairs = pair_op(
             existing, batch, id_col, text_col, threshold=threshold, persist=_track
         ).withColumn("batch_id", F.lit(batch_id))
         pairs.write.mode("append").parquet(pairs_dir)
@@ -274,14 +260,35 @@ def near_dup_ingest(
         for frame in held:
             frame.unpersist()
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _start(stream_df, checkpoint_dir, _process)
+
+
+def near_dup_ingest(
+    stream_df: DataFrame,
+    corpus_table: ParquetMergeTable,
+    pairs_dir: str,
+    checkpoint_dir: str,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    threshold: float = 0.5,
+) -> StreamingQuery:
+    """Streaming near-duplicate detection at ingest: each micro-batch is
+    (1) checked against the already-ingested corpus AND itself with the
+    batch-scaled incremental MinHash operator
+    (operators/dedup.py:minhash_incremental_pairs), (2) appended to the
+    corpus table via MERGE, and (3) its near-dup pairs appended to
+    ``pairs_dir`` — so the pair log and the corpus stay causally
+    consistent (a doc's pairs are recorded in the same micro-batch that
+    admits it).  Per-trigger work scales with the batch and its
+    collision set, not the corpus (the band probe is an equi-join
+    against the existing band table; on a deployment that table is a
+    persisted, bucketed output of previous batches)."""
+    from tlcn_oer_lakehouse_spark.operators.dedup import minhash_incremental_pairs
+
+    return _dedup_ingest(
+        stream_df, corpus_table, pairs_dir, checkpoint_dir,
+        id_col, text_col, threshold, minhash_incremental_pairs,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def exact_dedup_ingest(
@@ -292,16 +299,11 @@ def exact_dedup_ingest(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.5,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming EXACT set-similarity dedup at ingest — the prefix-filter
-    twin of :func:`near_dup_ingest`: each micro-batch is (1) joined
-    against the already-ingested corpus AND itself with
-    ``prefix_filter_incremental_pairs`` (every Jaccard ≥ τ pair touching
-    the batch, guaranteed — no LSH recall loss), (2) appended to the
-    corpus table via MERGE, and (3) its pairs appended to ``pairs_dir``
-    before admission (crash-replay yields duplicate bit-identical pair
-    rows, never lost ones; :func:`read_pairs` collapses them).
+    twin of :func:`near_dup_ingest`: ``prefix_filter_incremental_pairs``
+    finds every Jaccard ≥ τ pair touching the batch, guaranteed — no LSH
+    recall loss.
 
     The standing index's global token order is frozen per trigger at
     the CURRENT corpus's df (operator docstring: exactness holds under
@@ -312,42 +314,10 @@ def exact_dedup_ingest(
         prefix_filter_incremental_pairs,
     )
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batch = batch_df.select(id_col, text_col).persist()
-        spark = batch.sparkSession
-        if corpus_table.exists():
-            existing = corpus_table.read().select(id_col, text_col)
-        else:
-            existing = spark.createDataFrame([], batch.schema)
-        # Per-trigger cache hygiene (ADVICE r10): without a tracking
-        # callback the operator caches four frames per trigger — two of
-        # them (sh_e / ordered_e) corpus-sized and re-derived from the
-        # growing standing corpus — and never frees them.
-        held: list[DataFrame] = []
-
-        def _track(_key: str, frame: DataFrame) -> DataFrame:
-            held.append(frame.persist())
-            return frame
-
-        pairs = prefix_filter_incremental_pairs(
-            existing, batch, id_col, text_col, threshold=threshold, persist=_track
-        ).withColumn("batch_id", F.lit(batch_id))
-        pairs.write.mode("append").parquet(pairs_dir)
-        corpus_table.merge_upsert(batch)
-        batch.unpersist()
-        for frame in held:
-            frame.unpersist()
-
-    writer = (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _dedup_ingest(
+        stream_df, corpus_table, pairs_dir, checkpoint_dir,
+        id_col, text_col, threshold, prefix_filter_incremental_pairs,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def corpus_prep_ingest(
@@ -360,7 +330,6 @@ def corpus_prep_ingest(
     min_quality: float = 0.55,
     window: int = 50,
     stride: int = 40,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming twin of queries/traindata.py:td_pipeline_e2e — the whole
     corpus-prep flow applied incrementally at ingest: each micro-batch is
@@ -371,13 +340,9 @@ def corpus_prep_ingest(
     table via MERGE, and (4) sliding-window chunked with the SAME chunker
     the batch pipeline uses, chunks appended under ``chunks_dir``.
 
-    Replay safety: foreachBatch may re-deliver a batch after a crash; the
-    corpus anti-join drops already-admitted fingerprints, so re-admission
-    is a no-op and chunks are re-appended only for rows that survive it.
-
-    Composition of tested pieces: landing stream → functions/text.py
-    scoring → operators/chunking.py:token_window_chunks →
-    ParquetMergeTable.merge_upsert."""
+    Replay safety: the corpus anti-join drops already-admitted
+    fingerprints, so a replayed batch's re-admission is a no-op and
+    chunks are re-appended only for rows that survive it."""
     from tlcn_oer_lakehouse_spark.functions.text import (
         fingerprint,
         lang_id,
@@ -386,10 +351,6 @@ def corpus_prep_ingest(
     from tlcn_oer_lakehouse_spark.operators.chunking import token_window_chunks
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        from pyspark.sql import Window
-
         scored = batch_df.select(
             id_col,
             text_col,
@@ -426,14 +387,24 @@ def corpus_prep_ingest(
             corpus_table.merge_upsert(admitted)
         admitted.unpersist()
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, checkpoint_dir, _process)
+
+
+def _cms_cells(term: Column, depth: int, width: int) -> Column:
+    """One ``cell`` struct (row, col) per sketch row for ``term`` — the
+    hash family the write path (:func:`cms_ingest`) and the read path
+    (:func:`cms_estimate`) must share."""
+    from tlcn_oer_lakehouse_spark.queries.traindata import _bucket
+
+    return F.explode(
+        F.array(*[
+            F.struct(
+                F.lit(i).alias("row"),
+                _bucket(F.concat_ws("|", F.lit(str(i)), term), width).alias("col"),
+            )
+            for i in range(depth)
+        ])
+    ).alias("cell")
 
 
 def cms_ingest(
@@ -443,7 +414,6 @@ def cms_ingest(
     text_col: str = "text",
     depth: int = 4,
     width: int = 1024,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming count-min sketch accumulation: each micro-batch's term
     stream collapses to its own ≤ depth×width partial sketch (a tiny
@@ -457,25 +427,10 @@ def cms_ingest(
     a streaming-accumulated sketch is bit-identical to the batch sketch
     over the union of the batches (pinned by test)."""
     from tlcn_oer_lakehouse_spark.functions.text import tokens
-    from tlcn_oer_lakehouse_spark.queries.traindata import _bucket
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         terms = batch_df.select(F.explode(tokens(F.col(text_col))).alias("term"))
-        cells = terms.select(
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        F.lit(i).alias("row"),
-                        _bucket(
-                            F.concat_ws("|", F.lit(str(i)), F.col("term")), width
-                        ).alias("col"),
-                    )
-                    for i in range(depth)
-                ])
-            ).alias("cell")
-        )
+        cells = terms.select(_cms_cells(F.col("term"), depth, width))
         (
             cells.groupBy("cell.row", "cell.col")
             .agg(F.count(F.lit(1)).alias("c"))
@@ -484,23 +439,16 @@ def cms_ingest(
             .parquet(sketch_dir)
         )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, checkpoint_dir, _process)
 
 
 def cms_merged(spark: SparkSession, sketch_dir: str) -> DataFrame:
     """The live sketch: cell-wise sum of every appended partial.
 
-    Replay-safe: foreachBatch is at-least-once, so a crash-replayed
-    batch appends its (bit-identical, deterministic) partial twice —
-    the ``(batch_id, row, col)`` dropDuplicates collapses replays
-    before the sum, making the merged sketch exactly-once."""
+    Replay-safe: a crash-replayed batch appends its (bit-identical,
+    deterministic) partial twice — the ``(batch_id, row, col)``
+    dropDuplicates collapses replays before the sum, making the merged
+    sketch exactly-once."""
     return (
         spark.read.parquet(sketch_dir)
         .dropDuplicates(["batch_id", "row", "col"])
@@ -519,21 +467,8 @@ def cms_estimate(
 ) -> DataFrame:
     """Point-estimate term counts against the merged sketch: min over
     the depth probe cells (the CMS read path)."""
-    from tlcn_oer_lakehouse_spark.queries.traindata import _bucket
-
     probes = terms.select(
-        F.col(term_col),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("row"),
-                    _bucket(
-                        F.concat_ws("|", F.lit(str(i)), F.col(term_col)), width
-                    ).alias("col"),
-                )
-                for i in range(depth)
-            ])
-        ).alias("cell"),
+        F.col(term_col), _cms_cells(F.col(term_col), depth, width)
     ).select(term_col, "cell.row", "cell.col")
     merged = cms_merged(spark, sketch_dir)
     return (
@@ -564,7 +499,6 @@ def hll_ingest(
     registers_dir: str,
     checkpoint_dir: str,
     text_col: str = "text",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming HyperLogLog accumulation: each micro-batch's term
     stream collapses to its register maxima (≤ HLL_M rows) appended
@@ -579,8 +513,6 @@ def hll_ingest(
     from tlcn_oer_lakehouse_spark.queries.traindata import hll_register_cols
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         terms = batch_df.select(F.explode(tokens(F.col(text_col))).alias("term"))
         idx, rank = hll_register_cols(F.col("term"))
         (
@@ -591,14 +523,7 @@ def hll_ingest(
             .parquet(registers_dir)
         )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, checkpoint_dir, _process)
 
 
 def hll_merged_registers(spark: SparkSession, registers_dir: str) -> DataFrame:
@@ -610,42 +535,6 @@ def hll_merged_registers(spark: SparkSession, registers_dir: str) -> DataFrame:
     )
 
 
-def changes_stream(table: ParquetMergeTable) -> DataFrame:
-    """Streaming tail of a merge table's change data feed — the Delta
-    "table as a streaming source" analog.  Every commit writes its change
-    log to ``{table}__v{n}/_changes/`` (sinks/merge.py); a file-source
-    stream over that glob discovers each commit's log files exactly once,
-    so a consumer runs the same fold it would run on ``read_changes``
-    batches, continuously, with checkpointed progress.
-
-    ``_commit_version`` is recovered from the file path (the version dir
-    name), keeping the streamed rows schema-identical to the batch feed.
-
-    Retention caveat (same trade Delta documents for VACUUM vs streaming
-    reads): ``vacuum`` may delete a version dir whose log a lagging
-    stream has not processed yet — run retention slower than consumer
-    lag.  The batch path raises on vacuumed gaps; a file stream cannot
-    see files that no longer exist, so this is an operational contract.
-    """
-    from pyspark.sql.types import StringType, StructField
-
-    feed_schema = StructType(
-        list(table.read().schema.fields)
-        + [StructField("_change_type", StringType(), True)]
-    )
-    glob = f"{table.path}__v*/{table.CHANGES_DIR}"
-    return (
-        table.spark.readStream.schema(feed_schema)
-        .parquet(glob)
-        .withColumn(
-            "_commit_version",
-            F.regexp_extract(
-                F.input_file_name(), r"__v(\d+)/" , 1
-            ).cast("long"),
-        )
-    )
-
-
 def expectations_ingest(
     stream_df: DataFrame,
     rules: list,
@@ -653,7 +542,6 @@ def expectations_ingest(
     quarantine_dir: str,
     metrics_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming twin of the declarative expectations operator
     (`operators/expectations.py`, registered batch query
@@ -677,8 +565,6 @@ def expectations_ingest(
     from tlcn_oer_lakehouse_spark.operators.expectations import expect
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         res = expect(batch_df, rules)
         clean_table.merge_upsert(res.clean)
         res.quarantined.withColumn("_batch_id", F.lit(batch_id)).write.mode(
@@ -688,14 +574,7 @@ def expectations_ingest(
             "append"
         ).parquet(metrics_dir)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, checkpoint_dir, _process)
 
 
 def dq_metrics_rollup(spark: SparkSession, metrics_dir: str) -> DataFrame:

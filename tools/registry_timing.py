@@ -28,11 +28,12 @@ def main() -> None:
     spark = get_spark(app_name="registry_timing")
     done = set()
     if os.path.exists(out_path):  # resumable; retry rows that errored
-        done = {
-            row["name"]
-            for row in map(json.loads, open(out_path))
-            if "err" not in row
-        }
+        with open(out_path) as f:
+            kept = [row for row in map(json.loads, f) if "err" not in row]
+        # rewrite without the err rows so a retried name keeps one row
+        with open(out_path, "w") as f:
+            f.writelines(json.dumps(row) + "\n" for row in kept)
+        done = {row["name"] for row in kept}
     with open(out_path, "a") as f:
         for name, spec in sorted(REGISTRY.items()):
             if name in done:
