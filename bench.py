@@ -227,16 +227,12 @@ def _stage_timings(spark, sf_dir: str) -> dict[str, float]:
     against a non-noise-dominated number: each stage is forced to full
     execution independently (noop sink), so stage times overlap — they
     localize cost, they don't sum to the query time."""
-    from pyspark.sql import functions as F
-
     from tlcn_oer_lakehouse_spark.operators.dedup import (
-        MINHASH_P,
-        _base_hash,
-        _minhash_a,
-        _minhash_b,
+        _nonempty,
         jaccard_verify_arrays,
         minhash_doc_arrays,
         minhash_lsh_candidate_pairs,
+        minhash_signatures,
     )
     from tlcn_oer_lakehouse_spark.queries.textops import augmented_corpus
     from tlcn_oer_lakehouse_spark.queries.traindata import contamination_check
@@ -257,20 +253,8 @@ def _stage_timings(spark, sf_dir: str) -> dict[str, float]:
         corpus = augmented_corpus(spark, sf_dir)
         base = minhash_doc_arrays(corpus, "doc_id", "text", 3).persist()
         out["minhash.shingles"] = run("shingles", base)
-        arr = base.filter(F.size("tok_arr") > 0).select(
-            "doc", "tok_arr", F.size("tok_arr").alias("n_shingles")
-        )
-        sh = arr.select("doc", F.explode("tok_arr").alias("shingle")).select(
-            "doc", _base_hash(F.col("shingle")).alias("bh")
-        )
-        sigs = sh.groupBy("doc").agg(
-            *[
-                F.min(
-                    (F.col("bh") * _minhash_a(i) + _minhash_b(i)) % MINHASH_P
-                ).alias(f"h{i}")
-                for i in range(16)
-            ]
-        ).persist()
+        arr = _nonempty(base)
+        sigs = minhash_signatures(arr, 16).persist()
         out["minhash.signatures"] = run("signatures", sigs)
         cands = minhash_lsh_candidate_pairs(sigs, 16, 4).persist()
         out["minhash.candidates"] = run("candidates", cands)

@@ -203,28 +203,6 @@ def test_deduplicated_corpus_keeps_canonicals(spark, sf_dir):
     pairs.unpersist()
 
 
-def test_minhash_xxhash64_production_hash(spark, sf_dir):
-    """The production hash family (xxhash64 JVM intrinsic instead of
-    md5-prefix) must find every exact-copy pair the md5 family finds —
-    exact duplicates have identical shingle sets, so banding catches
-    them under ANY hash; verify is hash-independent (Jaccard 1.0)."""
-    from tlcn_oer_lakehouse_spark.operators.dedup import minhash_near_duplicates
-    from tlcn_oer_lakehouse_spark.queries.textops import augmented_corpus
-
-    corpus = augmented_corpus(spark, sf_dir).persist()
-    xx = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in minhash_near_duplicates(
-            corpus, "doc_id", "text", hash_fn="xxhash64"
-        ).collect()
-    }
-    corpus.unpersist()
-    for d in range(0, 500, 10):
-        pair = (d, d + COPY_OFFSET)
-        assert pair in xx, f"exact copy pair {pair} missed under xxhash64"
-        assert xx[pair] == 1.0
-
-
 def test_kmeans_partitions_separable_clusters(spark):
     """Lloyd iterations must recover well-separated clusters regardless
     of the (deliberately bad) lowest-id init, and assignment cost must

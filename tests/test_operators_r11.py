@@ -230,8 +230,7 @@ def test_minhash_array_form_matches_exploded_pipeline(spark):
     """The r11 array-form pipeline (minhash_doc_arrays → fold/explode
     signatures → jaccard_verify_arrays) must be value-identical to the
     r7-r10 exploded form (shingle_rows → groupBy signatures →
-    jaccard_verify_from): same candidate pairs, same exact Jaccard, for
-    both hash families."""
+    jaccard_verify_from): same candidate pairs, same exact Jaccard."""
     from tlcn_oer_lakehouse_spark.operators.dedup import (
         MINHASH_P,
         _minhash_a,
@@ -253,35 +252,34 @@ def test_minhash_array_form_matches_exploded_pipeline(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    for hash_fn in ("md5", "xxhash64"):
-        sh = shingle_rows(docs, "doc_id", "text", 3, hash_fn=hash_fn).persist()
-        sigs = sh.groupBy("doc").agg(
-            *[
-                F.min(
-                    (F.col("bh") * _minhash_a(i) + _minhash_b(i)) % MINHASH_P
-                ).alias(f"h{i}")
-                for i in range(16)
-            ],
-            F.count(F.lit(1)).alias("n_shingles"),
+    sh = shingle_rows(docs, "doc_id", "text", 3).persist()
+    sigs = sh.groupBy("doc").agg(
+        *[
+            F.min(
+                (F.col("bh") * _minhash_a(i) + _minhash_b(i)) % MINHASH_P
+            ).alias(f"h{i}")
+            for i in range(16)
+        ],
+        F.count(F.lit(1)).alias("n_shingles"),
+    )
+    cands = minhash_lsh_candidate_pairs(sigs, 16, 4)
+    old = {
+        (r.doc_a, r.doc_b): r.jaccard
+        for r in jaccard_verify_from(
+            sh, cands, sizes=sigs.select("doc", "n_shingles")
         )
-        cands = minhash_lsh_candidate_pairs(sigs, 16, 4)
-        old = {
-            (r.doc_a, r.doc_b): r.jaccard
-            for r in jaccard_verify_from(
-                sh, cands, sizes=sigs.select("doc", "n_shingles")
-            )
-            .filter(F.col("jaccard") >= 0.5)
-            .collect()
-        }
-        new = {
-            (r.doc_a, r.doc_b): r.jaccard
-            for r in minhash_near_duplicates(
-                docs, "doc_id", "text", 3, 16, 4, 0.5, hash_fn=hash_fn
-            ).collect()
-        }
-        sh.unpersist()
-        assert new == old, f"hash_fn={hash_fn}: {new} != {old}"
-        assert (1, 3) in new  # the exact dup must survive either form
+        .filter(F.col("jaccard") >= 0.5)
+        .collect()
+    }
+    new = {
+        (r.doc_a, r.doc_b): r.jaccard
+        for r in minhash_near_duplicates(
+            docs, "doc_id", "text", 3, 16, 4, 0.5
+        ).collect()
+    }
+    sh.unpersist()
+    assert new == old, f"{new} != {old}"
+    assert (1, 3) in new  # the exact dup must survive either form
 
 
 def test_minhash_doc_arrays_sizes_match_exploded_counts(spark):

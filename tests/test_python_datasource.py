@@ -244,6 +244,30 @@ def test_writer_append_rejects_hive_partitioned_tables(spark, tmp_path):
         _write(_df(spark, 10), t.path, "append")
 
 
+@pytest.mark.parametrize("writer", ["batch_append", "stream_epoch"])
+def test_writers_refuse_tombstoned_head(spark, tmp_path, writer):
+    """Both python writers refuse to append onto a snapshot carrying
+    merge-on-read tombstones (hardlinking its files would resurrect the
+    deleted rows), and the refused commit leaves the head where it was."""
+    import pyarrow as pa
+
+    from tlcn_oer_lakehouse_spark.sinks.merge import head_version
+    from tlcn_oer_lakehouse_spark.sources.pyds import _MergeTableStreamWriter
+
+    t = _table(spark, tmp_path, name="tomb")
+    t.delete_where_mor([("id", "<", 10)])
+    head = head_version(t.path)
+    with pytest.raises(Exception, match="tombstone"):
+        if writer == "batch_append":
+            _write(_df(spark, 5), t.path, "append")
+        else:
+            w = _MergeTableStreamWriter({"path": t.path})
+            batch = pa.record_batch({"id": pa.array([5000], type=pa.int64())})
+            w.commit([w.write(iter([batch]))], 0)
+    assert head_version(t.path) == head
+    assert t.read().count() == 990
+
+
 def test_stream_writer_appends_with_exactly_once_epochs(spark, tmp_path):
     """df.writeStream.format('oer_mergetable'): micro-batches append
     through the snapshot protocol with CDF insert logs; a second run over

@@ -14,13 +14,21 @@ Scale design:
 - minhash: explode(shingles) → groupBy(doc) [shuffle 1] → explode(bands)
            → self-join on (band, band_hash) [shuffle 2, bucket-sized] →
            verify only candidates. Never all-pairs.
-- simhash: one groupBy(doc) for the signature; candidate pairing joins on
-           signature prefix bands (here: all-pairs fallback below a row
-           threshold, prefix-band join above it).
+- simhash: one groupBy(doc) for the signature; candidates come from a
+           pigeonhole equi-join on (segment_no, segment_value), then an
+           exact Hamming filter.  Never all-pairs.
 - ngram-jaccard: exact verify path; pairs come from a shared-shingle
            equi-join, not a cross join.
-- embedding: all-pairs only within sign-buckets (see similarity.py) —
-           brute force is the correctness baseline.
+- prefix-filter: exact Jaccard; candidates from an equi-join on
+           prefix shingles plus the PPJoin positional filter.
+- embedding: sign-band equi-join, then the exact cosine filter; the
+           all-pairs form is the correctness baseline only.
+
+Each stage exists once and the batch and incremental (O(delta) ingest)
+forms compose it: :func:`minhash_signatures`, ``_band_rows`` and
+``_band_pairs`` (LSH banding and the band self-join), ``_prefix_pairs``
+(prefix-filter candidates), ``_with_candidates`` (standing-side
+semi-join) and :func:`jaccard_verify_arrays` (exact verify).
 """
 
 from __future__ import annotations
@@ -52,8 +60,6 @@ def exact_duplicate_groups(df: DataFrame, id_col: str, text_col: str) -> DataFra
 # One md5 per shingle instead of num_hashes md5s; the affine step is
 # integer codegen.  P = 2^31-1 keeps every product < 2^63 (A_i < 2^17,
 # base < 2^32).  Portable: the same arithmetic runs in any SQL engine.
-# (At production scale swap base() for xxhash64 — same structure, no
-# cross-engine-oracle constraint there.)
 MINHASH_P = 2_147_483_647
 
 
@@ -69,42 +75,93 @@ def _base_hash(shingle: Column) -> Column:
     return F.conv(F.substring(F.md5(shingle), 1, 8), 16, 10).cast("long")
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, shingle_n: int = 3, num_hashes: int = 16
+def _persist(_key: str, frame: DataFrame) -> DataFrame:
+    """Default ``persist`` callback: (key, frame) -> persisted frame.
+    Registry callers pass a persist_replacing partial so a long-lived
+    session holds at most ONE live cached copy of each corpus-sized
+    frame per query; streaming callers pass a tracking callback that
+    unpersists at the end of each micro-batch."""
+    return frame.persist()
+
+
+def minhash_doc_arrays(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int = 3
 ) -> DataFrame:
-    """Per-document MinHash signature as ONE array-fold per row — no
-    explode, no shuffle; signatures materialize at scan speed.
+    """Per-doc distinct shingle ARRAYS: (doc, tok_arr) — UNFILTERED.
+    The array-form shared intermediate of the minhash pipeline: one
+    tokenize→shingle→distinct pass per document, no explode, no
+    shuffle.  Callers persist this frame and filter empties FROM THE
+    CACHE with :func:`_nonempty`: a ``filter(size(tok_arr) > 0)`` placed
+    below the persist gets pushed under the projection by Catalyst and
+    re-evaluates the whole array expression a second time per row in
+    the Filter node (measured 1.3 s → 8.3 s at sf0.1 — shingles()
+    contains lambda expressions, which fall back to interpreted
+    evaluation)."""
+    arr = F.array_distinct(shingles(tokens(F.col(text_col)), shingle_n))
+    return df.select(F.col(id_col).alias("doc"), arr.alias("tok_arr"))
 
-    The fold runs over the base-hash array (one md5 per distinct
-    shingle, staged in its own projection so it is computed once), and
-    the accumulator is the running elementwise min of the
-    ``num_hashes`` affine hashes — ``zip_with(acc, affines(h), least)``.
-    Documents with no shingles (fewer than ``shingle_n`` tokens) are
-    excluded, matching the explode+groupBy formulation."""
-    base_arr = F.transform(
-        F.array_distinct(shingles(tokens(F.col(text_col)), shingle_n)), _base_hash
+
+def _nonempty(doc_arrays: DataFrame) -> DataFrame:
+    """(doc, tok_arr, n_shingles) for docs with at least one shingle;
+    filter and size evaluate against the cached ``tok_arr`` column."""
+    return doc_arrays.filter(F.size("tok_arr") > 0).select(
+        "doc", "tok_arr", F.size("tok_arr").alias("n_shingles")
     )
 
-    def _affines(h: Column) -> Column:
-        return F.array(
-            *[
-                (h * _minhash_a(i) + _minhash_b(i)) % MINHASH_P
-                for i in range(num_hashes)
-            ]
+
+def minhash_signatures(docs_arr: DataFrame, num_hashes: int) -> DataFrame:
+    """Per-document MinHash signature (doc, h0..h{num_hashes-1}) of a
+    (doc, tok_arr) frame: shingles explode from the cached array frame,
+    one codegen'd md5 base hash per shingle, then a map-side-combined
+    min aggregate of the affine family (higher-order per-element
+    hashing measured slower: lambdas evaluate interpreted)."""
+    sh = docs_arr.select("doc", F.explode("tok_arr").alias("shingle")).select(
+        "doc", _base_hash(F.col("shingle")).alias("bh")
+    )
+    return sh.groupBy("doc").agg(
+        *[
+            F.min((F.col("bh") * _minhash_a(i) + _minhash_b(i)) % MINHASH_P).alias(
+                f"h{i}"
+            )
+            for i in range(num_hashes)
+        ]
+    )
+
+
+def _band_rows(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """LSH banding: (doc, band_no, band_hash), one row per band of
+    ``num_hashes // bands`` signature rows."""
+    rows = num_hashes // bands
+    structs = [
+        F.struct(
+            F.lit(b).alias("band_no"),
+            F.md5(F.concat_ws(",", *[F.col(f"h{b * rows + r}") for r in range(rows)])).alias("band_hash"),
         )
+        for b in range(bands)
+    ]
+    return sigs.select("doc", F.explode(F.array(*structs)).alias("band")).select(
+        "doc", "band.band_no", "band.band_hash"
+    )
 
-    acc0 = F.array(*[F.lit(MINHASH_P).cast("long")] * num_hashes)
-    sig = F.aggregate(
-        F.col("__bh"),
-        acc0,
-        lambda acc, h: F.zip_with(acc, _affines(h), lambda x, y: F.least(x, y)),
-    )
-    staged = df.select(F.col(id_col).alias("doc"), base_arr.alias("__bh")).filter(
-        F.size("__bh") > 0
-    )
-    packed = staged.select("doc", sig.alias("__sig"))
-    return packed.select(
-        "doc", *[F.col("__sig")[i].alias(f"h{i}") for i in range(num_hashes)]
+
+def _band_pairs(probe: DataFrame, build: DataFrame, pair_cond: Column) -> DataFrame:
+    """Distinct canonical (doc_a < doc_b) pairs of docs sharing a
+    (band_no, band_hash) bucket — an equi-join, never a cross product.
+    ``pair_cond`` relates the probe side ``a.doc`` to the build side
+    ``b.doc``: ``<`` for a self-join, ``!=`` when a batch probes the
+    batch ∪ standing bands (each batch×batch pair then arrives in both
+    orientations and collapses in the canonical dropDuplicates)."""
+    a, b = F.col("a.doc"), F.col("b.doc")
+    return (
+        probe.alias("a")
+        .join(
+            build.alias("b"),
+            (F.col("a.band_no") == F.col("b.band_no"))
+            & (F.col("a.band_hash") == F.col("b.band_hash"))
+            & pair_cond,
+        )
+        .select(F.least(a, b).alias("doc_a"), F.greatest(a, b).alias("doc_b"))
+        .dropDuplicates()
     )
 
 
@@ -116,61 +173,28 @@ def minhash_lsh_candidate_pairs(
     sharing any band hash. Returns distinct (doc_a, doc_b) with
     doc_a < doc_b. The join key is (band_no, band_hash) — bucket-sized,
     never a cross product."""
-    rows = num_hashes // bands
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band_no"),
-            F.md5(F.concat_ws(",", *[F.col(f"h{b * rows + r}") for r in range(rows)])).alias("band_hash"),
-        )
-        for b in range(bands)
-    ]
-    banded = sigs.select(
-        F.col("doc"), F.explode(F.array(*band_structs)).alias("band")
-    ).select("doc", "band.band_no", "band.band_hash")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_no") == F.col("b.band_no"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .dropDuplicates()
-    )
+    banded = _band_rows(sigs, num_hashes, bands)
+    return _band_pairs(banded, banded, F.col("a.doc") < F.col("b.doc"))
 
 
 def shingle_rows(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-    hash_fn: str = "md5",
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int = 3
 ) -> DataFrame:
     """Exploded distinct shingles per document: (doc, shingle, bh) where
-    bh is the base hash.  The shared intermediate of the minhash
-    pipeline — computed (and persisted) ONCE, then reused by signature
-    aggregation, candidate banding and exact verify, instead of
-    re-deriving the tokenize→shingle→distinct→hash chain per consumer.
-
-    ``hash_fn``: 'md5' (default — md5-prefix integers, replayable in any
-    SQL engine, the oracle-checkable form) or 'xxhash64' (the production
-    form: one JVM intrinsic per shingle instead of a cryptographic hash
-    + hex parse; same positive-31-bit range so the affine family is
-    unchanged).  Exact-duplicate behavior is hash-independent; marginal
-    near-dup candidates may differ between families, which is why the
-    registered queries pin md5."""
-    if hash_fn == "xxhash64":
-        bh = F.pmod(F.xxhash64(F.col("shingle")), F.lit(MINHASH_P)).cast("long")
-    else:
-        bh = _base_hash(F.col("shingle"))
+    bh is the md5 base hash — the exploded shared intermediate of the
+    prefix-filter operators, and the reference form the array pipeline
+    is pinned against."""
     return df.select(
         F.col(id_col).alias("doc"),
         F.explode(
             F.array_distinct(shingles(tokens(F.col(text_col)), shingle_n))
         ).alias("shingle"),
-    ).withColumn("bh", bh)
+    ).withColumn("bh", _base_hash(F.col("shingle")))
+
+
+def _doc_freq(sh: DataFrame) -> DataFrame:
+    """(shingle, df): the number of documents holding each shingle."""
+    return sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
 
 
 def jaccard_verify_from(
@@ -208,22 +232,6 @@ def jaccard_verify_from(
     )
 
 
-def minhash_doc_arrays(
-    df: DataFrame, id_col: str, text_col: str, shingle_n: int = 3
-) -> DataFrame:
-    """Per-doc distinct shingle ARRAYS: (doc, tok_arr) — UNFILTERED.
-    The array-form shared intermediate of the minhash pipeline: one
-    tokenize→shingle→distinct pass per document, no explode, no
-    shuffle.  Callers persist this frame and filter empties FROM THE
-    CACHE: a ``filter(size(tok_arr) > 0)`` placed below the persist
-    gets pushed under the projection by Catalyst and re-evaluates the
-    whole array expression a second time per row in the Filter node
-    (measured 1.3 s → 8.3 s at sf0.1 — shingles() contains lambda
-    expressions, which fall back to interpreted evaluation)."""
-    arr = F.array_distinct(shingles(tokens(F.col(text_col)), shingle_n))
-    return df.select(F.col(id_col).alias("doc"), arr.alias("tok_arr"))
-
-
 def jaccard_verify_arrays(pairs: DataFrame, docs_arr: DataFrame) -> DataFrame:
     """Exact Jaccard for candidate pairs via per-pair array intersection:
     two doc-keyed equi-joins fetch the distinct-shingle arrays and
@@ -258,6 +266,18 @@ def jaccard_verify_arrays(pairs: DataFrame, docs_arr: DataFrame) -> DataFrame:
     )
 
 
+def _with_candidates(batch: DataFrame, standing: DataFrame, cand: DataFrame) -> DataFrame:
+    """``batch`` ∪ the ``standing`` rows of docs that appear in a
+    candidate pair — the incremental verify fetches standing-side arrays
+    for the collision set only (semi-join pruned), never the corpus."""
+    cand_docs = (
+        cand.select(F.col("doc_a").alias("doc"))
+        .unionByName(cand.select(F.col("doc_b").alias("doc")))
+        .distinct()
+    )
+    return batch.unionByName(standing.join(cand_docs, "doc", "leftsemi"))
+
+
 def minhash_near_duplicates(
     df: DataFrame,
     id_col: str,
@@ -266,58 +286,29 @@ def minhash_near_duplicates(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
-    hash_fn: str = "md5",
     persist=None,
     doc_arrays: DataFrame | None = None,
 ) -> DataFrame:
-    """Full MinHash+LSH near-dup pipeline, array form (r11): one
-    persisted per-doc array frame → map-side fold signatures → banded
-    candidate pairs → per-pair ``array_intersect`` exact verify →
-    threshold filter.
+    """Full MinHash+LSH near-dup pipeline: one persisted per-doc array
+    frame → :func:`minhash_signatures` → banded candidate pairs →
+    per-pair ``array_intersect`` exact verify → threshold filter.
 
-    vs the r7-r10 exploded form (shingle explode + groupBy signatures +
-    two exploded-row verify joins + per-pair count aggregate): the
-    tokenize→shingle→distinct pass runs once into the persisted array
-    frame, signatures explode FROM THE CACHE (codegen'd base hash +
-    map-side-combined min aggregate — higher-order per-element hashing
-    measured slower: lambdas evaluate interpreted), and the verify
+    The tokenize→shingle→distinct pass runs once into the persisted
+    array frame; signatures explode FROM THE CACHE, and the verify
     moves one array row per pair side instead of ~|A| skinny rows per
-    candidate.  Output is value-identical (same distinct shingle sets,
-    same affine mins, same integer intersection counts).
-    ``hash_fn='xxhash64'`` selects the production hash (see
-    :func:`shingle_rows`).  ``doc_arrays`` lets a caller that already
-    persisted the :func:`minhash_doc_arrays` frame for the SAME
-    (df, id_col, text_col, shingle_n) hand it in, sharing one cache and
-    one tokenize pass (dedup_recall_eval's truth side does)."""
-    if doc_arrays is not None:
-        base = doc_arrays
-    else:
-        if persist is None:
-            persist = lambda _key, frame: frame.persist()  # noqa: E731
-        base = persist("arr", minhash_doc_arrays(df, id_col, text_col, shingle_n))
-    # filter + size evaluate against the CACHED column (see
-    # minhash_doc_arrays on why the filter must sit above the persist)
-    docs_arr = base.filter(F.size("tok_arr") > 0).select(
-        "doc", "tok_arr", F.size("tok_arr").alias("n_shingles")
+    candidate.  ``doc_arrays`` lets a caller that already persisted the
+    :func:`minhash_doc_arrays` frame for the SAME (df, id_col, text_col,
+    shingle_n) hand it in, sharing one cache and one tokenize pass
+    (dedup_recall_eval's truth side does)."""
+    if doc_arrays is None:
+        doc_arrays = (persist or _persist)(
+            "arr", minhash_doc_arrays(df, id_col, text_col, shingle_n)
+        )
+    docs_arr = _nonempty(doc_arrays)
+    cands = minhash_lsh_candidate_pairs(
+        minhash_signatures(docs_arr, num_hashes), num_hashes, bands
     )
-    if hash_fn == "xxhash64":
-        bh = F.pmod(F.xxhash64(F.col("shingle")), F.lit(MINHASH_P)).cast("long")
-    else:
-        bh = _base_hash(F.col("shingle"))
-    sh = docs_arr.select("doc", F.explode("tok_arr").alias("shingle")).select(
-        "doc", bh.alias("bh")
-    )
-    sigs = sh.groupBy("doc").agg(
-        *[
-            F.min((F.col("bh") * _minhash_a(i) + _minhash_b(i)) % MINHASH_P).alias(
-                f"h{i}"
-            )
-            for i in range(num_hashes)
-        ]
-    )
-    cands = minhash_lsh_candidate_pairs(sigs, num_hashes, bands)
-    verified = jaccard_verify_arrays(cands, docs_arr)
-    return verified.filter(F.col("jaccard") >= threshold)
+    return jaccard_verify_arrays(cands, docs_arr).filter(F.col("jaccard") >= threshold)
 
 
 def ngram_jaccard_pairs(
@@ -342,25 +333,13 @@ def ngram_jaccard_pairs(
     verify step still uses every shingle, so reported Jaccard values are
     uncapped; only candidate *generation* is df-limited.
 
-    Array form (r11, same rework as :func:`minhash_near_duplicates`):
-    the persisted intermediate is the per-doc distinct-shingle ARRAY
+    The persisted intermediate is the per-doc distinct-shingle ARRAY
     frame; the df aggregate and the rare-shingle pairing explode FROM
-    THE CACHE (they genuinely need exploded rows), but the verify is
-    :func:`jaccard_verify_arrays` — one array row per pair side and a
-    map-side ``array_intersect`` instead of two exploded-row joins plus
-    a per-pair count aggregate.  Value-identical: same distinct sets,
-    same integer counts, same double division."""
-    base = minhash_doc_arrays(df, id_col, text_col, shingle_n).persist()
-    docs_arr = base.filter(F.size("tok_arr") > 0).select(
-        "doc", "tok_arr", F.size("tok_arr").alias("n_shingles")
-    )
+    THE CACHE (they genuinely need exploded rows), and the verify is
+    :func:`jaccard_verify_arrays`."""
+    docs_arr = _nonempty(minhash_doc_arrays(df, id_col, text_col, shingle_n).persist())
     sh = docs_arr.select("doc", F.explode("tok_arr").alias("shingle"))
-    rare = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= max_df)
-        .select("shingle")
-    )
+    rare = _doc_freq(sh).filter(F.col("df") <= max_df).select("shingle")
     sh_rare = sh.join(rare, "shingle")
     pairs = (
         sh_rare.alias("a")
@@ -402,12 +381,12 @@ def _tau_fraction(threshold: float) -> tuple[int, int]:
 
 
 def _df_ordered_arrays(sh: DataFrame, freq: DataFrame, how: str = "inner") -> DataFrame:
-    """Per-doc shingle arrays sorted by the (df, shingle) global order
-    ``freq`` defines.  ``how='left'`` admits shingles absent from
-    ``freq`` at df=0 — rarer than everything observed, so a frozen
-    standing-index order extends consistently to batch-only tokens
-    (any TOTAL order preserves prefix-filter exactness; df-freshness
-    only affects pruning power)."""
+    """Per-doc shingle arrays (doc, tok_arr, n_shingles) sorted by the
+    (df, shingle) global order ``freq`` defines.  ``how='left'`` admits
+    shingles absent from ``freq`` at df=0 — rarer than everything
+    observed, so a frozen standing-index order extends consistently to
+    batch-only tokens (any TOTAL order preserves prefix-filter
+    exactness; df-freshness only affects pruning power)."""
     df_key = F.coalesce(F.col("df"), F.lit(0)) if how == "left" else F.col("df")
     return (
         sh.join(freq, "shingle", how)
@@ -422,7 +401,7 @@ def _df_ordered_arrays(sh: DataFrame, freq: DataFrame, how: str = "inner") -> Da
         .select(
             "doc",
             F.transform("toks", lambda s: s["shingle"]).alias("tok_arr"),
-            F.size("toks").alias("n"),
+            F.size("toks").alias("n_shingles"),
         )
     )
 
@@ -431,14 +410,71 @@ def _prefix_rows(ordered: DataFrame, p: int, q: int) -> DataFrame:
     """Explode each doc's first n − ⌈p·n/q⌉ + 1 ordered shingles (the
     prefix-filter theorem's window), ceil as integer ceil-division."""
     plen = (
-        F.col("n")
-        - F.expr(f"({p}L * n + {q - 1}) div {q}").cast("int")
+        F.col("n_shingles")
+        - F.expr(f"({p}L * n_shingles + {q - 1}) div {q}").cast("int")
         + F.lit(1)
     )
     return ordered.select(
         F.col("doc"),
-        F.col("n"),
+        F.col("n_shingles"),
         F.posexplode(F.slice("tok_arr", F.lit(1), plen)).alias("pos0", "shingle"),
+    )
+
+
+def _prefix_pairs(
+    probe: DataFrame, build: DataFrame, pair_cond: Column, p: int, q: int
+) -> DataFrame:
+    """Canonical (doc_a < doc_b) candidate pairs from an equi-join of
+    :func:`_prefix_rows` frames on prefix shingles, after the length
+    filter and the PPJoin positional filter, both in exact integer
+    arithmetic.  ``pair_cond`` relates ``a.doc`` to ``b.doc`` as in
+    :func:`_band_pairs`; canonicalization swaps sizes and positions
+    with their docs, so the pair-level min aggregate stays
+    side-consistent when a pair arrives in both orientations."""
+    a_n, b_n = F.col("a.n_shingles"), F.col("b.n_shingles")
+    lo_is_a = F.col("a.doc") < F.col("b.doc")
+
+    def lo(c: str) -> Column:
+        return F.when(lo_is_a, F.col(f"a.{c}")).otherwise(F.col(f"b.{c}"))
+
+    def hi(c: str) -> Column:
+        return F.when(lo_is_a, F.col(f"b.{c}")).otherwise(F.col(f"a.{c}"))
+
+    matches = (
+        probe.alias("a")
+        .join(
+            build.alias("b"),
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & pair_cond
+            # length filter τ·max ≤ min as cross-multiplied integers:
+            # q·na ≥ p·nb ∧ q·nb ≥ p·na
+            & (a_n.cast("long") * q >= b_n.cast("long") * p)
+            & (b_n.cast("long") * q >= a_n.cast("long") * p),
+        )
+        .select(
+            F.least(F.col("a.doc"), F.col("b.doc")).alias("doc_a"),
+            F.greatest(F.col("a.doc"), F.col("b.doc")).alias("doc_b"),
+            lo("n_shingles").alias("na"),
+            hi("n_shingles").alias("nb"),
+            (lo("pos0") + 1).alias("ia"),
+            (hi("pos0") + 1).alias("jb"),
+        )
+    )
+    return (
+        matches.groupBy("doc_a", "doc_b")
+        .agg(
+            F.min("na").alias("na"),
+            F.min("nb").alias("nb"),
+            F.min("ia").alias("ia"),
+            F.min("jb").alias("jb"),
+        )
+        .filter(
+            # required overlap ⌈τ/(1+τ)·(na+nb)⌉ = ⌈p·(na+nb)/(p+q)⌉,
+            # again as integer ceil-division
+            F.lit(1) + F.least(F.col("na") - F.col("ia"), F.col("nb") - F.col("jb"))
+            >= F.expr(f"({p}L * (na + nb) + {p + q - 1}) div {p + q}")
+        )
+        .select("doc_a", "doc_b")
     )
 
 
@@ -483,24 +519,16 @@ def prefix_filter_jaccard_pairs(
     dropDuplicates shuffle one-for-one (measured at sf0.1: 425k raw
     candidate rows → 170k pairs after the filter).
 
-    Verify is ARRAY-INTERSECT, not exploded joins: candidates fetch the
-    two per-doc sorted token arrays (two doc-keyed equi-joins against
-    the one persisted corpus frame) and |A∩B| is a map-side
-    ``array_intersect`` per pair — the exploded alternative shuffles
-    ~100 skinny rows per candidate through two joins (measured at
-    sf0.1: 11.5 s → ~3.5-4 s cold end-to-end).
+    Verify is :func:`jaccard_verify_arrays` over the one persisted
+    ordered-array frame — the exploded alternative shuffles ~100 skinny
+    rows per candidate through two joins (measured at sf0.1: 11.5 s →
+    ~3.5-4 s cold end-to-end).
 
     Plan shape: two combinable groupBys (df counts, per-doc ordered
     arrays — the single persisted frame), one equi-join on prefix
     shingles, a combinable pair aggregate, two doc-keyed array-fetch
     joins — no cartesian, no window."""
-    # ``persist`` — (key, frame) -> persisted frame.  Registry callers
-    # pass a persist_replacing partial so a long-lived session holds at
-    # most ONE live cached copy of each corpus-sized frame per query
-    # (the ADVICE-r8 dedup_semdedup discipline); ad-hoc callers get a
-    # plain .persist().
-    if persist is None:
-        persist = lambda _key, frame: frame.persist()  # noqa: E731
+    persist = persist or _persist
     p, q = _tau_fraction(threshold)
     # persisted: the tokenize→shingle→distinct→explode scan feeds BOTH
     # the df aggregate and the ordering join — uncached it runs twice,
@@ -509,70 +537,10 @@ def prefix_filter_jaccard_pairs(
     sh = persist(
         "sh", shingle_rows(df, id_col, text_col, shingle_n).select("doc", "shingle")
     )
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    ordered = persist("ordered", _df_ordered_arrays(sh, freq))
+    ordered = persist("ordered", _df_ordered_arrays(sh, _doc_freq(sh)))
     prefix = _prefix_rows(ordered, p, q)
-    # length filter τ·max ≤ min as cross-multiplied integers:
-    # q·na ≥ p·nb ∧ q·nb ≥ p·na
-    matches = (
-        prefix.alias("a")
-        .join(
-            prefix.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc") < F.col("b.doc"))
-            & (F.col("a.n").cast("long") * q >= F.col("b.n").cast("long") * p)
-            & (F.col("b.n").cast("long") * q >= F.col("a.n").cast("long") * p),
-        )
-        .select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            F.col("a.n").alias("na"),
-            F.col("b.n").alias("nb"),
-            (F.col("a.pos0") + 1).alias("ia"),
-            (F.col("b.pos0") + 1).alias("jb"),
-        )
-    )
-    cand = (
-        matches.groupBy("doc_a", "doc_b")
-        .agg(
-            F.min("na").alias("na"),
-            F.min("nb").alias("nb"),
-            F.min("ia").alias("ia"),
-            F.min("jb").alias("jb"),
-        )
-        .filter(
-            # required overlap ⌈τ/(1+τ)·(na+nb)⌉ = ⌈p·(na+nb)/(p+q)⌉,
-            # again as integer ceil-division
-            F.lit(1) + F.least(F.col("na") - F.col("ia"), F.col("nb") - F.col("jb"))
-            >= F.expr(f"({p}L * (na + nb) + {p + q - 1}) div {p + q}")
-        )
-        .select("doc_a", "doc_b")
-    )
-    inter = F.size(F.array_intersect("ta", "tb"))
-    return (
-        cand.join(
-            ordered.select(
-                F.col("doc").alias("doc_a"),
-                F.col("tok_arr").alias("ta"),
-                F.col("n").alias("na"),
-            ),
-            "doc_a",
-        )
-        .join(
-            ordered.select(
-                F.col("doc").alias("doc_b"),
-                F.col("tok_arr").alias("tb"),
-                F.col("n").alias("nb"),
-            ),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            (inter / (F.col("na") + F.col("nb") - inter)).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    cand = _prefix_pairs(prefix, prefix, F.col("a.doc") < F.col("b.doc"), p, q)
+    return jaccard_verify_arrays(cand, ordered).filter(F.col("jaccard") >= threshold)
 
 
 def prefix_filter_incremental_pairs(
@@ -612,8 +580,7 @@ def prefix_filter_incremental_pairs(
     collision set.  Candidate generation, the positional filter, and
     the array-intersect verify are the full operator's, bounds in
     exact integer arithmetic."""
-    if persist is None:
-        persist = lambda _key, frame: frame.persist()  # noqa: E731
+    persist = persist or _persist
     p, q = _tau_fraction(threshold)
     sh_e = persist(
         "sh_e",
@@ -624,80 +591,21 @@ def prefix_filter_incremental_pairs(
         shingle_rows(batch, id_col, text_col, shingle_n).select("doc", "shingle"),
     )
     # frozen standing-index order: df over the EXISTING corpus only
-    freq = sh_e.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+    freq = _doc_freq(sh_e)
     ordered_e = persist("ordered_e", _df_ordered_arrays(sh_e, freq))
     ordered_b = persist("ordered_b", _df_ordered_arrays(sh_b, freq, how="left"))
     pref_b = _prefix_rows(ordered_b, p, q)
-    pref_all = pref_b.unionByName(_prefix_rows(ordered_e, p, q))
-    # probe: batch prefixes against ALL prefixes.  a.doc != b.doc keeps
-    # batch×batch pairs once per orientation; canonicalization below
-    # collapses them in the min-aggregate (positions swap with docs, so
-    # the aggregate stays side-consistent).
-    lo_is_a = F.col("a.doc") < F.col("b.doc")
-    matches = (
-        pref_b.alias("a")
-        .join(
-            pref_all.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc") != F.col("b.doc"))
-            & (F.col("a.n").cast("long") * q >= F.col("b.n").cast("long") * p)
-            & (F.col("b.n").cast("long") * q >= F.col("a.n").cast("long") * p),
-        )
-        .select(
-            F.least(F.col("a.doc"), F.col("b.doc")).alias("doc_a"),
-            F.greatest(F.col("a.doc"), F.col("b.doc")).alias("doc_b"),
-            F.when(lo_is_a, F.col("a.n")).otherwise(F.col("b.n")).alias("na"),
-            F.when(lo_is_a, F.col("b.n")).otherwise(F.col("a.n")).alias("nb"),
-            (F.when(lo_is_a, F.col("a.pos0")).otherwise(F.col("b.pos0")) + 1).alias("ia"),
-            (F.when(lo_is_a, F.col("b.pos0")).otherwise(F.col("a.pos0")) + 1).alias("jb"),
-        )
+    # probe: batch prefixes against ALL prefixes
+    cand = _prefix_pairs(
+        pref_b,
+        pref_b.unionByName(_prefix_rows(ordered_e, p, q)),
+        F.col("a.doc") != F.col("b.doc"),
+        p,
+        q,
     )
-    cand = (
-        matches.groupBy("doc_a", "doc_b")
-        .agg(
-            F.min("na").alias("na"),
-            F.min("nb").alias("nb"),
-            F.min("ia").alias("ia"),
-            F.min("jb").alias("jb"),
-        )
-        .filter(
-            F.lit(1) + F.least(F.col("na") - F.col("ia"), F.col("nb") - F.col("jb"))
-            >= F.expr(f"({p}L * (na + nb) + {p + q - 1}) div {p + q}")
-        )
-        .select("doc_a", "doc_b")
-    )
-    cand_docs = (
-        cand.select(F.col("doc_a").alias("doc"))
-        .unionByName(cand.select(F.col("doc_b").alias("doc")))
-        .distinct()
-    )
-    # existing-side arrays only for candidate docs; batch arrays in full
-    arrs = ordered_b.unionByName(ordered_e.join(cand_docs, "doc", "leftsemi"))
-    inter = F.size(F.array_intersect("ta", "tb"))
-    return (
-        cand.join(
-            arrs.select(
-                F.col("doc").alias("doc_a"),
-                F.col("tok_arr").alias("ta"),
-                F.col("n").alias("na"),
-            ),
-            "doc_a",
-        )
-        .join(
-            arrs.select(
-                F.col("doc").alias("doc_b"),
-                F.col("tok_arr").alias("tb"),
-                F.col("n").alias("nb"),
-            ),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            (inter / (F.col("na") + F.col("nb") - inter)).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return jaccard_verify_arrays(
+        cand, _with_candidates(ordered_b, ordered_e, cand)
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def simhash_signatures(
@@ -855,22 +763,16 @@ def embedding_near_duplicates_blocked(
             out = out + e
         return out.cast("long")
 
+    # the band value stands in for the MinHash band hash: same
+    # (band_no, band_hash) bucket join
     banded = df.select(
-        F.col(id_col).alias("__bid"),
+        F.col(id_col).alias("doc"),
         F.posexplode(F.array(*[_band(k) for k in range(bands)])).alias(
-            "band_no", "band_val"
+            "band_no", "band_hash"
         ),
     )
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_no") == F.col("b.band_no"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.__bid") < F.col("b.__bid")),
-        )
-        .select(F.col("a.__bid").alias("id_a"), F.col("b.__bid").alias("id_b"))
-        .dropDuplicates()
+    cand = _band_pairs(banded, banded, F.col("a.doc") < F.col("b.doc")).select(
+        F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")
     )
     vecs = df.select(F.col(id_col).alias("__vid"), F.col(vec_col).alias("__v"))
     return (
@@ -919,77 +821,18 @@ def minhash_incremental_pairs(
     ``arr_e``) are unpersisted at the end of each micro-batch instead of
     accumulating for the lifetime of the stream (ADVICE r10).
 
-    Array form (r11, same rework as :func:`minhash_near_duplicates`):
-    the persisted per-side intermediates are per-doc distinct-shingle
-    ARRAY frames (smaller than the exploded rows they replace — no
-    ~8 B/shingle row overhead), signatures explode FROM THE CACHE with
-    a codegen'd base hash, and the verify is
-    :func:`jaccard_verify_arrays` over batch arrays ∪ semi-join-pruned
-    candidate existing arrays.  Value-identical (same distinct sets,
-    affine mins, integer counts)."""
-    if persist is None:
-        persist = lambda _key, frame: frame.persist()  # noqa: E731
-
-    def _arr_side(side: DataFrame, key: str) -> DataFrame:
-        base = persist(key, minhash_doc_arrays(side, id_col, text_col, shingle_n))
-        return base.filter(F.size("tok_arr") > 0).select(
-            "doc", "tok_arr", F.size("tok_arr").alias("n_shingles")
-        )
-
-    def _sigs(docs_arr: DataFrame) -> DataFrame:
-        sh = docs_arr.select("doc", F.explode("tok_arr").alias("shingle")).select(
-            "doc", _base_hash(F.col("shingle")).alias("bh")
-        )
-        return sh.groupBy("doc").agg(
-            *[
-                F.min(
-                    (F.col("bh") * _minhash_a(i) + _minhash_b(i)) % MINHASH_P
-                ).alias(f"h{i}")
-                for i in range(num_hashes)
-            ]
-        )
-
-    docs_b = _arr_side(batch, "arr_b")
-    sigs_b = _sigs(docs_b)
-    docs_e = _arr_side(existing, "arr_e")
-    sigs_e = _sigs(docs_e)
-
-    def _banded(sigs: DataFrame) -> DataFrame:
-        rows = num_hashes // bands
-        structs = [
-            F.struct(
-                F.lit(b).alias("band_no"),
-                F.md5(
-                    F.concat_ws(
-                        ",", *[F.col(f"h{b * rows + r}") for r in range(rows)]
-                    )
-                ).alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
-        return sigs.select(
-            "doc", F.explode(F.array(*structs)).alias("band")
-        ).select("doc", "band.band_no", "band.band_hash")
-
-    b_bands = _banded(sigs_b)
-    all_bands = b_bands.unionByName(_banded(sigs_e))
-    cands = (
-        b_bands.alias("a")
-        .join(
-            all_bands.alias("b"),
-            (F.col("a.band_no") == F.col("b.band_no"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc") != F.col("b.doc")),
-        )
-        .select(
-            F.least(F.col("a.doc"), F.col("b.doc")).alias("doc_a"),
-            F.greatest(F.col("a.doc"), F.col("b.doc")).alias("doc_b"),
-        )
-        .dropDuplicates()
+    The persisted per-side intermediates are per-doc distinct-shingle
+    ARRAY frames (no ~8 B/shingle exploded-row overhead); signatures,
+    banding and the band probe are the batch operator's stages, and the
+    verify is :func:`jaccard_verify_arrays` over batch arrays ∪
+    semi-join-pruned candidate existing arrays."""
+    persist = persist or _persist
+    docs_b = _nonempty(persist("arr_b", minhash_doc_arrays(batch, id_col, text_col, shingle_n)))
+    docs_e = _nonempty(persist("arr_e", minhash_doc_arrays(existing, id_col, text_col, shingle_n)))
+    b_bands = _band_rows(minhash_signatures(docs_b, num_hashes), num_hashes, bands)
+    e_bands = _band_rows(minhash_signatures(docs_e, num_hashes), num_hashes, bands)
+    cands = _band_pairs(
+        b_bands, b_bands.unionByName(e_bands), F.col("a.doc") != F.col("b.doc")
     )
-    cand_docs = cands.select(F.col("doc_a").alias("doc")).unionByName(
-        cands.select(F.col("doc_b").alias("doc"))
-    ).distinct()
-    docs_needed = docs_b.unionByName(docs_e.join(cand_docs, "doc", "leftsemi"))
-    verified = jaccard_verify_arrays(cands, docs_needed)
+    verified = jaccard_verify_arrays(cands, _with_candidates(docs_b, docs_e, cands))
     return verified.filter(F.col("jaccard") >= threshold)

@@ -1,13 +1,9 @@
-"""Parametrized lexical ranking — the generic form of the registered
-BM25 query (queries/retrieval.py:43-93, chatbot_api.py:202-217), usable
-with ANY query-term list / corpus for evaluation harnesses and batch
-query serving.
-
-Same plan shape as the registered query: scan → per-term tf columns →
-1-row stats aggregate → broadcast → per-row math → TakeOrdered.  The
-only shuffle is the final top-k.  tests/test_retrieval_quality.py pins
-this implementation equal to the registered query's scores on its fixed
-query, so the two cannot drift.
+"""Batched lexical ranking: BM25 for MANY queries in one job — the
+serving shape at scale.  Single-query BM25 over any (ids, text) frame is
+``queries/retrieval.py:bm25_score_frame``, the one scoring core behind
+the registered query (reference: chatbot_api.py:202-217);
+tests/test_retrieval_quality.py pins this batch form equal to it per
+query.
 """
 
 from __future__ import annotations
@@ -16,46 +12,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tlcn_oer_lakehouse_spark.functions.text import tokens
-
-
-def _tf(toks, term: str):
-    return F.size(F.filter(toks, lambda t: t == F.lit(term)))
-
-
-def bm25_rank(
-    docs: DataFrame,
-    query_terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """Okapi BM25 of ``query_terms`` against every document:
-    (id, bm25_raw), unordered — callers sort/limit."""
-    toks = tokens(F.col(text_col))
-    scored = docs.select(
-        F.col(id_col),
-        F.size(toks).alias("dl"),
-        *[_tf(toks, t).alias(f"tf_{i}") for i, t in enumerate(query_terms)],
-    )
-    stats = scored.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("dl").alias("sum_dl"),
-        *[
-            F.sum(F.when(F.col(f"tf_{i}") > 0, 1).otherwise(0)).alias(f"df_{i}")
-            for i in range(len(query_terms))
-        ],
-    )
-    j = scored.crossJoin(F.broadcast(stats))
-    avgdl = F.col("sum_dl").cast("double") / F.col("n_docs")
-    score = F.lit(0.0)
-    for i in range(len(query_terms)):
-        tf = F.col(f"tf_{i}").cast("double")
-        df = F.col(f"df_{i}").cast("double")
-        idf = F.log(F.lit(1.0) + (F.col("n_docs") - df + 0.5) / (df + 0.5))
-        norm = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * F.col("dl") / avgdl))
-        score = score + idf * norm
-    return j.select(id_col, score.alias("bm25_raw"))
 
 
 def bm25_rank_batch(
@@ -80,7 +36,7 @@ def bm25_rank_batch(
     shuffle, keyed (query_id, doc)] → per-query top-k window
     (partitioned by query_id — parallel, never global).  Only documents
     matching ≥1 query term are scored, which is exactly BM25's support;
-    scores match :func:`bm25_rank` to double rounding (term-sum order
+    scores match ``bm25_score_frame`` to double rounding (term-sum order
     differs)."""
     from pyspark.sql import Window
 

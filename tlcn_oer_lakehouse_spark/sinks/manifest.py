@@ -26,6 +26,7 @@ commit); the JSON layout and pruning logic are unchanged.
 from __future__ import annotations
 
 import json
+import operator
 import os
 
 import pyarrow.parquet as pq
@@ -72,6 +73,12 @@ def with_zvalue(df, cols: list[str], bits: int = 16, out_col: str = "__z"):
 _SUPPORTED = (int, float, str)
 
 Predicate = tuple[str, str, object]  # (column, op, value)
+
+# op -> comparison, for Spark Columns and pyarrow expressions alike
+PREDICATE_OPS = {
+    "=": operator.eq, ">=": operator.ge, ">": operator.gt,
+    "<=": operator.le, "<": operator.lt,
+}
 
 
 def _file_bounds(path: str) -> tuple[int, dict[str, list]]:

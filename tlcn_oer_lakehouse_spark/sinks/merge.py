@@ -49,10 +49,18 @@ from tlcn_oer_lakehouse_spark.operators.incremental import (
     merge_upsert,
 )
 from tlcn_oer_lakehouse_spark.sinks.manifest import (
+    PREDICATE_OPS,
     Predicate,
     prune_files,
     write_manifest,
 )
+
+
+def _where(df: DataFrame, predicates: list[Predicate]) -> DataFrame:
+    """Apply conjunctive (column, op, value) predicates as row filters."""
+    for col, op, val in predicates:
+        df = df.filter(PREDICATE_OPS[op](F.col(col), val))
+    return df
 
 
 def version_dir(path: str, n: int) -> str:
@@ -156,11 +164,17 @@ class ParquetMergeTable:
         # readers snapshot-isolated (see module docstring).
         return self._read_snapshot_dir(os.path.realpath(self.path))
 
-    def _read_snapshot_dir(self, snap: str) -> DataFrame:
-        """Read one immutable snapshot dir: strip hidden partition
-        columns and apply merge-on-read tombstones (both pinned to this
-        snapshot — later head swaps don't affect the plan)."""
-        df = self.spark.read.parquet(snap)
+    def _read_snapshot_dir(self, snap: str, files: list[str] | None = None) -> DataFrame:
+        """Read one immutable snapshot dir — or only ``files`` of it:
+        strip hidden partition columns and apply merge-on-read tombstones
+        (both pinned to this snapshot — later head swaps don't affect
+        the plan)."""
+        if files is None:
+            df = self.spark.read.parquet(snap)
+        else:
+            # basePath keeps hive-style partition columns resolvable when
+            # reading an explicit file subset
+            df = self.spark.read.option("basePath", snap).parquet(*files)
         if self.partition_transforms:
             df = df.drop(*self.partition_transforms)
         tomb = os.path.join(snap, self.TOMBSTONE_DIR)
@@ -195,28 +209,10 @@ class ParquetMergeTable:
         analog of Iceberg manifest pruning."""
         snap = os.path.realpath(self.path)
         files = self.pruned_files(predicates)
-        if files is None:
-            df = self.read()
-        elif not files:
-            df = self.read().limit(0)
-        else:
-            # basePath keeps hive-style partition columns resolvable when
-            # reading an explicit file subset
-            df = self.spark.read.option("basePath", snap).parquet(*files)
-            if self.partition_transforms:
-                df = df.drop(*self.partition_transforms)
-            tomb = os.path.join(snap, self.TOMBSTONE_DIR)
-            if os.path.isdir(tomb):
-                df = df.join(
-                    self.spark.read.parquet(tomb), self.key, "left_anti"
-                )
-        for col, op, val in predicates:
-            c = F.col(col)
-            df = df.filter(
-                {"=": c == val, ">=": c >= val, ">": c > val,
-                 "<=": c <= val, "<": c < val}[op]
-            )
-        return df
+        df = self._read_snapshot_dir(snap, files or None)
+        if files == []:
+            df = df.limit(0)
+        return _where(df, predicates)
 
     # -- writes -----------------------------------------------------------
 
@@ -578,13 +574,7 @@ class ParquetMergeTable:
         if not self.exists():
             return 0
         snap = os.path.realpath(self.path)
-        doomed = self._read_snapshot_dir(snap)
-        for col, op, val in predicates:
-            c = F.col(col)
-            doomed = doomed.filter(
-                {"=": c == val, ">=": c >= val, ">": c > val,
-                 "<=": c <= val, "<": c < val}[op]
-            )
+        doomed = _where(self._read_snapshot_dir(snap), predicates)
         new_keys = doomed.select(self.key).distinct().persist()
         n_new = new_keys.count()
         if n_new == 0:

@@ -68,6 +68,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import LongType, StructField, StructType
 
+from tlcn_oer_lakehouse_spark.sinks.manifest import PREDICATE_OPS
 from tlcn_oer_lakehouse_spark.sinks.merge import (
     all_version_nums,
     head_version,
@@ -209,9 +210,7 @@ class _MergeTableReader(DataSourceReader):
         for col, op, val in self._predicates:
             if col in partition.hive or col not in self._arrow_schema.names:
                 continue
-            f = pc.field(col)
-            term = {"=": f == val, ">": f > val, ">=": f >= val,
-                    "<": f < val, "<=": f <= val}[op]
+            term = PREDICATE_OPS[op](pc.field(col), val)
             flt = term if flt is None else flt & term
         table = pq.read_table(partition.path, filters=flt)
         # materialize hive partition columns at their inferred types
@@ -239,6 +238,88 @@ class _MergeTableReader(DataSourceReader):
 class _FileCommit(WriterCommitMessage):
     filename: str
     columns: tuple
+
+
+def _write_task(iterator, data_dir: str, log_changes: bool) -> _FileCommit:
+    """Executor side of both writers: stream one task's Arrow batches
+    into one parquet file in ``data_dir`` and, when ``log_changes``,
+    dual-write the same batches into ``data_dir/_changes/`` tagged
+    ``_change_type='insert'``, so CDF consumers see appended rows with
+    no driver-side data movement."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    writer = changes_writer = None
+    columns: tuple = ()
+    for batch in iterator:
+        if writer is None:
+            columns = tuple(batch.schema.names)
+            writer = pq.ParquetWriter(os.path.join(data_dir, name), batch.schema)
+            if log_changes:
+                changes_writer = pq.ParquetWriter(
+                    os.path.join(data_dir, "_changes", name),
+                    batch.schema.append(pa.field("_change_type", pa.string())),
+                )
+        writer.write_batch(batch)
+        if changes_writer is not None:
+            changes_writer.write_batch(
+                pa.RecordBatch.from_arrays(
+                    list(batch.columns)
+                    + [pa.array(["insert"] * batch.num_rows, type=pa.string())],
+                    schema=changes_writer.schema,
+                )
+            )
+    for w in (writer, changes_writer):
+        if w is not None:
+            w.close()
+    if writer is None:  # empty task partition
+        return _FileCommit(filename="", columns=())
+    return _FileCommit(filename=name, columns=columns)
+
+
+# (tombstone refusal, hive-partition refusal) per writer
+_APPEND_REFUSALS = (
+    "append to a snapshot with MOR tombstones is not "
+    "supported by the python writer — compact first",
+    "append to a hive-partitioned snapshot is not "
+    "supported by the python writer",
+)
+_STREAM_REFUSALS = (
+    "stream append to a tombstone-carrying snapshot is not "
+    "supported — compact first",
+    "stream append to a hive-partitioned snapshot is "
+    "not supported",
+)
+
+
+def _link_head_files(head: str, staging: str, refusals: tuple[str, str]) -> list[str]:
+    """Hardlink the head snapshot's data files into ``staging`` and
+    return them.  A tombstone-carrying or hive-partitioned head is
+    refused: those layouts need the table-class writers."""
+    if os.path.isdir(os.path.join(head, "_tombstones")):
+        raise ValueError(refusals[0])
+    files = _walk_data_files(head)
+    if any(os.sep in os.path.relpath(f, head) for f in files):
+        raise ValueError(refusals[1])
+    for f in files:
+        os.link(f, os.path.join(staging, os.path.basename(f)))
+    return files
+
+
+def _carry_epoch_markers(head: str, staging: str) -> None:
+    """Carry the head's ``_epoch_*`` exactly-once ledger forward.  The
+    ledger records epoch DELIVERY, independent of the data being
+    appended or replaced, so every commit (stream epoch, batch append
+    or overwrite) copies it: the newest snapshot then holds EVERY
+    committed epoch marker, ``vacuum()`` — which keeps the newest
+    versions — cannot drop the only copy, and a restarted stream can
+    never re-commit an already-delivered epoch."""
+    for name in os.listdir(head):
+        if name.startswith("_epoch_"):
+            open(os.path.join(staging, name), "w").close()
 
 
 class _MergeTableWriter(DataSourceArrowWriter):
@@ -276,48 +357,12 @@ class _MergeTableWriter(DataSourceArrowWriter):
     # -- executors --------------------------------------------------------
 
     def write(self, iterator) -> _FileCommit:
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        name = f"part-{uuid.uuid4().hex}.parquet"
-        writer = None
-        changes_writer = None
-        columns: tuple = ()
-        for batch in iterator:
-            if writer is None:
-                columns = tuple(batch.schema.names)
-                writer = pq.ParquetWriter(
-                    os.path.join(self._staging, name), batch.schema
-                )
-                if not self._overwrite:
-                    ch_schema = batch.schema.append(
-                        pa.field("_change_type", pa.string())
-                    )
-                    changes_writer = pq.ParquetWriter(
-                        os.path.join(self._staging, "_changes", name), ch_schema
-                    )
-            writer.write_batch(batch)
-            if changes_writer is not None:
-                tagged = pa.RecordBatch.from_arrays(
-                    list(batch.columns)
-                    + [pa.array(["insert"] * batch.num_rows, type=pa.string())],
-                    schema=changes_writer.schema,
-                )
-                changes_writer.write_batch(tagged)
-        for w in (writer, changes_writer):
-            if w is not None:
-                w.close()
-        if writer is None:  # empty task partition
-            return _FileCommit(filename="", columns=())
-        return _FileCommit(filename=name, columns=columns)
+        # overwrite commits log no changes (physical-only, like compact)
+        return _write_task(iterator, self._staging, log_changes=not self._overwrite)
 
     # -- driver -----------------------------------------------------------
 
     def commit(self, messages) -> None:
-        import shutil
-
         from tlcn_oer_lakehouse_spark.sinks.manifest import write_manifest
         from tlcn_oer_lakehouse_spark.sinks.merge import publish_snapshot
 
@@ -325,24 +370,10 @@ class _MergeTableWriter(DataSourceArrowWriter):
         col_sets = {m.columns for m in written}
         if len(col_sets) > 1:
             raise ValueError(f"tasks wrote divergent schemas: {col_sets}")
-        head_exists = os.path.isdir(os.path.realpath(self._path)) and os.path.exists(
-            self._path
-        )
+        head = os.path.realpath(self._path)
+        head_exists = os.path.isdir(head) and os.path.exists(self._path)
         if not self._overwrite and head_exists:
-            snap = os.path.realpath(self._path)
-            if os.path.isdir(os.path.join(snap, "_tombstones")):
-                raise ValueError(
-                    "append to a snapshot with MOR tombstones is not "
-                    "supported by the python writer — compact first"
-                )
-            old_files = _walk_data_files(snap)
-            for f in old_files:
-                rel = os.path.relpath(f, snap)
-                if os.sep in rel:
-                    raise ValueError(
-                        "append to a hive-partitioned snapshot is not "
-                        "supported by the python writer"
-                    )
+            old_files = _link_head_files(head, self._staging, _APPEND_REFUSALS)
             if old_files and written:
                 import pyarrow.parquet as pq
 
@@ -363,29 +394,8 @@ class _MergeTableWriter(DataSourceArrowWriter):
                         "does not match table schema "
                         f"{sorted(old_sig.items(), key=str)}"
                     )
-            for f in old_files:
-                os.link(f, os.path.join(self._staging, os.path.basename(f)))
-            # a batch append between stream epochs must not orphan the
-            # stream writer's exactly-once ledger (see
-            # _MergeTableStreamWriter.commit) — carry markers forward
-            for marker in os.listdir(snap):
-                if marker.startswith("_epoch_"):
-                    open(os.path.join(self._staging, marker), "w").close()
-        if self._overwrite:
-            # physical-only commit — same CDF semantics as compact()
-            ch = os.path.join(self._staging, "_changes")
-            if os.path.isdir(ch):
-                shutil.rmtree(ch)
-            # the exactly-once ledger records epoch DELIVERY, which is
-            # independent of the data being replaced: an overwrite that
-            # dropped the head's _epoch_* markers would let a restarted
-            # stream re-commit an already-delivered epoch and
-            # double-append — so overwrite carries markers forward too
-            if head_exists:
-                snap = os.path.realpath(self._path)
-                for marker in os.listdir(snap):
-                    if marker.startswith("_epoch_"):
-                        open(os.path.join(self._staging, marker), "w").close()
+        if head_exists:
+            _carry_epoch_markers(head, self._staging)
         write_manifest(self._staging)
         publish_snapshot(self._path, self._staging)
 
@@ -408,11 +418,11 @@ class _MergeTableStreamWriter(DataSourceStreamArrowWriter):
     in a retained version dir and discards the replayed files instead of
     double-appending: the marker IS the idempotence ledger, and it rides
     inside the atomically-published snapshot so there is no window where
-    data landed but the marker did not.  Every commit (stream epoch or
-    batch append) copies the head's ``_epoch_*`` markers forward, so the
-    newest snapshot carries the complete ledger and ``vacuum()`` —
-    which retains the newest versions — never deletes the only copy of
-    an epoch's marker."""
+    data landed but the marker did not.  Every commit (stream epoch,
+    batch append or overwrite) copies the head's ``_epoch_*`` markers
+    forward (``_carry_epoch_markers``), so the newest snapshot carries
+    the complete ledger and ``vacuum()`` — which retains the newest
+    versions — never deletes the only copy of an epoch's marker."""
 
     def __init__(self, options: dict) -> None:
         if "path" not in options:
@@ -427,38 +437,7 @@ class _MergeTableStreamWriter(DataSourceStreamArrowWriter):
         os.makedirs(os.path.join(self._pending, "_changes"), exist_ok=True)
 
     def write(self, iterator) -> _FileCommit:
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        name = f"part-{uuid.uuid4().hex}.parquet"
-        writer = changes_writer = None
-        columns: tuple = ()
-        for batch in iterator:
-            if writer is None:
-                columns = tuple(batch.schema.names)
-                writer = pq.ParquetWriter(
-                    os.path.join(self._pending, name), batch.schema
-                )
-                changes_writer = pq.ParquetWriter(
-                    os.path.join(self._pending, "_changes", name),
-                    batch.schema.append(pa.field("_change_type", pa.string())),
-                )
-            writer.write_batch(batch)
-            changes_writer.write_batch(
-                pa.RecordBatch.from_arrays(
-                    list(batch.columns)
-                    + [pa.array(["insert"] * batch.num_rows, type=pa.string())],
-                    schema=changes_writer.schema,
-                )
-            )
-        for w in (writer, changes_writer):
-            if w is not None:
-                w.close()
-        if writer is None:
-            return _FileCommit(filename="", columns=())
-        return _FileCommit(filename=name, columns=columns)
+        return _write_task(iterator, self._pending, log_changes=True)
 
     def _epoch_already_committed(self, batch_id: int) -> bool:
         marker = f"_epoch_{batch_id}"
@@ -476,7 +455,6 @@ class _MergeTableStreamWriter(DataSourceStreamArrowWriter):
                         os.remove(p)
 
     def commit(self, messages, batchId: int) -> None:
-        import shutil
         import uuid
 
         from tlcn_oer_lakehouse_spark.sinks.manifest import write_manifest
@@ -490,26 +468,8 @@ class _MergeTableStreamWriter(DataSourceStreamArrowWriter):
         os.makedirs(os.path.join(staging, "_changes"), exist_ok=True)
         head = os.path.realpath(self._path)
         if os.path.isdir(head) and os.path.exists(self._path):
-            if os.path.isdir(os.path.join(head, "_tombstones")):
-                raise ValueError(
-                    "stream append to a tombstone-carrying snapshot is not "
-                    "supported — compact first"
-                )
-            for f in _walk_data_files(head):
-                if os.sep in os.path.relpath(f, head):
-                    raise ValueError(
-                        "stream append to a hive-partitioned snapshot is "
-                        "not supported"
-                    )
-                os.link(f, os.path.join(staging, os.path.basename(f)))
-            # carry the epoch ledger forward: the newest snapshot always
-            # holds EVERY committed epoch marker, so vacuum() — which
-            # keeps the newest versions — cannot drop the idempotence
-            # record an old version dir held, and a post-vacuum epoch
-            # replay is still detected instead of double-appending
-            for name in os.listdir(head):
-                if name.startswith("_epoch_"):
-                    open(os.path.join(staging, name), "w").close()
+            _link_head_files(head, staging, _STREAM_REFUSALS)
+            _carry_epoch_markers(head, staging)
         for m in written:
             os.rename(os.path.join(self._pending, m.filename),
                       os.path.join(staging, m.filename))
