@@ -1014,3 +1014,25 @@ def test_hostile_stsc_gap_bounded():
     assert len(_expand_stsc([(1, 2, 1), (1, 3, 1)], n_chunks=5)) == 5
     # well-formed two-run layout still expands exactly
     assert _expand_stsc([(1, 2, 1), (3, 1, 1)], n_chunks=4) == [2, 2, 1, 1]
+
+
+def test_huffman_lut_cache_is_capped():
+    """The DHT-keyed Huffman LUT cache is an LRU with a fixed cap: a
+    worker decoding many distinctly-encoded JPEGs must not grow it per
+    distinct table.  The most recently used table survives eviction and
+    a decode still works once the cache has churned."""
+    from tlcn_oer_lakehouse_spark.functions import jpegio
+
+    bits = [0] * 16
+    bits[7] = 3  # three 8-bit codes
+    n = jpegio._LUT_CACHE_MAX + 5
+    first = jpegio._huff_lut(bits, [0, 1, 2])
+    for v in range(1, n):
+        jpegio._huff_lut(bits, [v, v + 1, v + 2])
+        jpegio._huff_lut(bits, [0, 1, 2])  # keep the first table hot
+        assert len(jpegio._LUT_CACHE) <= jpegio._LUT_CACHE_MAX
+    assert jpegio._huff_lut(bits, [0, 1, 2]) is first
+    assert bytes(bits) + bytes([1, 2, 3]) not in jpegio._LUT_CACHE  # evicted
+    img = (np.arange(16 * 16 * 3) % 251).astype(np.uint8).reshape(16, 16, 3)
+    out = jpegio.read_jpeg(jpegio.write_jpeg(img, quality=90))
+    assert out.shape == img.shape

@@ -28,6 +28,7 @@ stage (operators/multimodal.py), as with every other codec here.
 from __future__ import annotations
 
 import struct
+from collections import OrderedDict
 
 import numpy as np
 
@@ -204,7 +205,11 @@ def _unstuff_entropy(raw: bytes) -> bytes:
     return np.delete(d[:cut], good_ff + 1).tobytes()
 
 
-_LUT_CACHE: dict[bytes, tuple[bytes, bytes]] = {}
+# LRU over DHT payloads, capped: a baseline JPEG carries at most 4 DC +
+# 4 AC tables, so 16 entries (2 MB) hold two images' table sets, and a
+# stream of distinctly-encoded images cannot grow a worker without bound
+_LUT_CACHE_MAX = 16
+_LUT_CACHE: OrderedDict[bytes, tuple[bytes, bytes]] = OrderedDict()
 
 
 def _huff_lut(bits: list[int], vals: list[int]) -> tuple[bytes, bytes]:
@@ -212,11 +217,13 @@ def _huff_lut(bits: list[int], vals: list[int]) -> tuple[bytes, bytes]:
     strings mapping the next 16 bits to (symbol, code length); length 0
     marks an invalid prefix.  One table lookup replaces the former
     bit-by-bit walk (the decode hot loop was ~95% read_bit by profile).
-    Cached on the DHT payload — the fixture encoder emits one fixed
-    table set, so the build cost is paid once per worker."""
+    Cached on the DHT payload (``_LUT_CACHE``) — the fixture encoder
+    emits one fixed table set, so the build cost is paid once per
+    worker."""
     key = bytes(bits) + bytes(vals)
     hit = _LUT_CACHE.get(key)
     if hit is not None:
+        _LUT_CACHE.move_to_end(key)
         return hit
     sym = np.zeros(1 << 16, dtype=np.uint8)
     ln = np.zeros(1 << 16, dtype=np.uint8)
@@ -233,6 +240,8 @@ def _huff_lut(bits: list[int], vals: list[int]) -> tuple[bytes, bytes]:
         code <<= 1
     out = (sym.tobytes(), ln.tobytes())
     _LUT_CACHE[key] = out
+    if len(_LUT_CACHE) > _LUT_CACHE_MAX:
+        _LUT_CACHE.popitem(last=False)
     return out
 
 

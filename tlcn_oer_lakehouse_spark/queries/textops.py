@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tlcn_oer_lakehouse_spark.functions.ids import packed_pairs, unpack_pair
 from tlcn_oer_lakehouse_spark.functions.text import (
     EN_STOPWORDS,
     LANG_MARKERS,
@@ -1280,11 +1281,12 @@ def g_jaccard_neighbors(spark: SparkSession, sf: str) -> DataFrame:
         .localCheckpoint()
     )
     deg = nbrs.select("u", F.size("ns").alias("d"))
-    # r12: the wedge pair is PACKED into one long (shiftleft(nu,32)|nv —
-    # partkeys are < 2^31 below SF ≈ 10⁴, far past any realizable corpus
-    # here) through the Σdeg² groupBy, and unpacked after the common≥2
-    # filter.  A single 8-byte key halves the aggregate's key bytes and
-    # hashes as one long instead of a struct (guide §2.3 narrow types):
+    # r12: the wedge pair is PACKED into one long (ids.packed_pairs:
+    # shiftleft(nu,32)|nv, raising on a partkey outside [0, 2^31) —
+    # partkeys stay below 2^31 up to SF ≈ 10⁴) through the Σdeg²
+    # groupBy, and unpacked after the common≥2 filter.  A single 8-byte
+    # key halves the aggregate's key bytes and hashes as one long
+    # instead of a struct (guide §2.3 narrow types):
     # interleaved A/B at sf1.0 — where the wedge aggregate dominates —
     # min 180.6 → 145.4 s (1.24×), both alternation cycles agreeing,
     # identical top-100 checksums at sf0.1 AND sf1.0.  (sf0.1 is a wash:
@@ -1292,25 +1294,14 @@ def g_jaccard_neighbors(spark: SparkSession, sf: str) -> DataFrame:
     # drop ~5% — lz4 already squeezed the struct — the win is aggregate
     # hashing, not wire bytes.)
     combos = nbrs.filter(F.size("ns") <= _JACC_NBR_CAP).select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ns"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ns"), i + 2, F.size(F.col("ns"))),
-                        lambda y: F.shiftleft(x, 32).bitwiseOR(y),
-                    ),
-                )
-            )
-        ).alias("p")
+        F.explode(packed_pairs(F.col("ns"))).alias("p")
     )
     common = (
         combos.groupBy("p")
         .agg(F.count(F.lit(1)).alias("common"))
         .filter(F.col("common") >= 2)
         .select(
-            F.shiftrightunsigned("p", 32).alias("nu"),
-            F.col("p").bitwiseAND(F.lit((1 << 32) - 1)).alias("nv"),
+            *unpack_pair(F.col("p"), "nu", "nv"),
             "common",
         )
     )
